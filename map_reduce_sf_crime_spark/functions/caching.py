@@ -24,7 +24,9 @@ consumed inside one eager write) should keep an explicit
 
 from __future__ import annotations
 
+import itertools
 import warnings
+import weakref
 
 from pyspark.sql import DataFrame
 
@@ -53,6 +55,13 @@ _RELEASE_FAILURES = 0
 #: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on first use.
 _RELEASE_LISTENERS: list = []
 
+#: py4j gateway → sequence number, assigned on first sight. Weak keys:
+#: a torn-down gateway drops out, and its successor gets a NEW number
+#: even if CPython reuses the old object's address (which ``id()``
+#: would alias).
+_GATEWAY_SEQ: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_NEXT_GATEWAY = itertools.count(1)
+
 
 def gateway_key():
     """Identity of the live py4j gateway, for keying process-lifetime
@@ -60,14 +69,19 @@ def gateway_key():
     holds py4j JavaObjects, so a memo entry built against a torn-down
     gateway (spark.stop() + full relaunch, or a Connect/classic
     switch) would serve dead Java references with an opaque error.
-    Keying the memo on the gateway object's id makes a restarted JVM
-    re-build the expression instead. (One gateway serves the process
-    in every current deployment — the key changes only in the failure
-    case it exists to catch.)"""
+    Keying the memo on a per-gateway sequence number makes a restarted
+    JVM re-build the expression instead. (One gateway serves the
+    process in every current deployment — the key changes only in the
+    failure case it exists to catch.)"""
     from pyspark import SparkContext
 
     gw = getattr(SparkContext, "_gateway", None)
-    return id(gw) if gw is not None else None
+    if gw is None:
+        return None
+    key = _GATEWAY_SEQ.get(gw)
+    return key if key is not None else _GATEWAY_SEQ.setdefault(
+        gw, next(_NEXT_GATEWAY)
+    )
 
 
 def on_release(callback) -> None:
@@ -196,25 +210,22 @@ def _release_frame(df: DataFrame) -> None:
     never the frame being returned/memoized — so the built-frame memo
     stays valid and no release listener needs to fire."""
     global _RELEASE_FAILURES
-    for i, t in enumerate(_TRACKED_CHECKPOINTS):
-        if t is df:
-            del _TRACKED_CHECKPOINTS[i]
-            try:
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:  # stopped session / drifted plan shape
-                _RELEASE_FAILURES += 1
-                warnings.warn(
-                    "plan_checkpoint(release_after=...): releasing an "
-                    "intermediate checkpoint failed (blocks deferred "
-                    "to the ContextCleaner)",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
-            return
     try:
+        for i, t in enumerate(_TRACKED_CHECKPOINTS):
+            if t is df:
+                del _TRACKED_CHECKPOINTS[i]
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+                return
         df.unpersist()
-    except Exception:  # session already stopped — nothing to free
-        pass
+    except Exception:  # stopped session / drifted plan shape
+        _RELEASE_FAILURES += 1
+        warnings.warn(
+            "plan_checkpoint(release_after=...): releasing an "
+            "intermediate frame failed (blocks deferred to the "
+            "ContextCleaner)",
+            RuntimeWarning,
+            stacklevel=3,
+        )
 
 
 def release_plan_checkpoints() -> int:

@@ -58,18 +58,3 @@ def minhash_sql(shingles: str, n_hashes: int) -> str:
         for k in range(n_hashes)
     )
     return f"[{mins}]"
-
-
-def simhash_bit_aggs(token_hash: str, n_bits: int) -> list[str]:
-    """SQL aggregate terms for SimHash over exploded token rows:
-    per bit i, a majority vote ``2*sum(bit_i) > count(*)``.
-
-    Used identically by Spark (via ``F.expr``) and DuckDB — both
-    support ``>>``/``&`` on bigint and the same aggregate shape, so the
-    generated strings are shared verbatim.
-    """
-    return [
-        f"(case when 2 * sum(({token_hash} >> {i}) & 1) > count(*) "
-        f"then {1 << i} else 0 end)"
-        for i in range(n_bits)
-    ]

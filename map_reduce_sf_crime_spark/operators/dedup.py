@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hash64_col, hash64_sql, minhash_sql
 from ..functions.text import shingles_col, shingles_sql, tokens_col, tokens_sql
 from ..functions.caching import plan_cache
-from ..sources.lakehouse import CDF_DEAD_TYPES, CDF_LIVE_TYPES
+from ..sources.generations import check_gen, drop_dead, split_changes
 
 SIMHASH_BITS = 32
 SIMHASH_BANDS = 4  # 4 × 8-bit bands ⇒ exact blocking for hamming ≤ 3
@@ -673,10 +673,6 @@ def append_signature_catalog(
     )
 
 
-#: read_changes vocabulary → catalog fold sides (the dedup twin of
-#: operators/similarity's index fold).
-
-
 def apply_changes_to_signature_catalog(
     spark,
     changes: DataFrame,
@@ -714,15 +710,11 @@ def apply_changes_to_signature_catalog(
     Cost is churn-sized on both legs; a rebuild clears the tombstone
     line. Equivalence with a from-scratch rebuild on the post-change
     corpus is pinned in tests/test_dedup.py."""
-    if gen <= 0:
-        raise ValueError(f"gen must be > 0 (got {gen}); 0 is the base build")
+    check_gen(gen)
     _check_catalog_meta(spark, buckets_table, n, n_hashes, bands)
-    # one materialization of the (join-shaped) feed for the two
-    # probes + two writes below
-    changes = changes.localCheckpoint()
+    dead, live = split_changes(changes)
     dead = (
-        changes.filter(F.col("_change_type").isin(*CDF_DEAD_TYPES))
-        .select("doc_id")
+        dead.select("doc_id")
         .distinct()
         .withColumn("dead_as_of", F.lit(gen).cast("int"))
     )
@@ -730,9 +722,7 @@ def apply_changes_to_signature_catalog(
         dead.coalesce(1).write.mode("append").format("parquet").saveAsTable(
             f"{buckets_table}_dead"
         )
-    live = changes.filter(
-        F.col("_change_type").isin(*CDF_LIVE_TYPES)
-    ).select("doc_id", "text")
+    live = live.select("doc_id", "text")
     if live.take(1):
         append_signature_catalog(
             live, buckets_table, shingles_table, n, n_hashes, bands,
@@ -744,28 +734,6 @@ def apply_changes_to_signature_catalog(
     for t in (buckets_table, shingles_table, f"{buckets_table}_dead"):
         if spark.catalog.tableExists(t):
             spark.catalog.refreshTable(t)
-
-
-def _filter_catalog_dead(spark, buckets_table: str, rows: DataFrame) -> DataFrame:
-    """Generation-scoped tombstone filter for catalog reads: drop
-    rows whose ``doc_id`` is dead as of a generation AFTER the row's
-    own ``gen``. No-op when no tombstone table exists. The dead set
-    is churn-sized by construction, hence the broadcast."""
-    if not spark.catalog.tableExists(f"{buckets_table}_dead"):
-        return rows
-    dead = (
-        spark.table(f"{buckets_table}_dead")
-        .groupBy("doc_id")
-        .agg(F.max("dead_as_of").alias("_dead_as_of"))
-    )
-    return (
-        rows.join(F.broadcast(dead), "doc_id", "left")
-        .filter(
-            F.col("_dead_as_of").isNull()
-            | (F.col("gen") >= F.col("_dead_as_of"))
-        )
-        .drop("_dead_as_of")
-    )
 
 
 def incremental_lsh_flags_cataloged(
@@ -794,15 +762,17 @@ def incremental_lsh_flags_cataloged(
     # buckets so dead docs never form candidates, shingles so a
     # REVIVED doc verifies against its live image only (stale
     # pre-image shingle rows would corrupt the intersection)
-    cat_b = _filter_catalog_dead(
-        spark, buckets_table, spark.table(buckets_table)
+    dead_t = f"{buckets_table}_dead"
+    dead = spark.table(dead_t) if spark.catalog.tableExists(dead_t) else None
+    cat_b = drop_dead(
+        spark.table(buckets_table), dead, "doc_id", "gen", "dead_as_of"
     ).alias("c")
     cands = _candidate_pairs(inc_b, cat_b, threshold)
     ti = base_i.select(
         F.col("doc_id"), F.col("sh").alias("sh_i"), F.col("n_sh").alias("ni")
     )
-    tc = _filter_catalog_dead(
-        spark, buckets_table, spark.table(shingles_table)
+    tc = drop_dead(
+        spark.table(shingles_table), dead, "doc_id", "gen", "dead_as_of"
     ).select(
         F.col("doc_id").alias("cat_id"),
         F.col("sh").alias("sh_c"),

@@ -338,17 +338,3 @@ def chunk_pack_sql(chunk_tokens: int, budget: int) -> str:
                  - n_tok) * 1.0 / {budget}) as bigint) as bin_id
     from chunks
     """
-
-
-def pack_documents_sql(budget: int) -> str:
-    return f"""
-    with t as (
-      select doc_id, source, len({tokens_sql('text')}) as n_tok
-      from documents
-    )
-    select doc_id, source, n_tok,
-           cast(floor((sum(n_tok) over (partition by source order by doc_id
-                 rows between unbounded preceding and current row)
-                 - n_tok) * 1.0 / {budget}) as bigint) as bin_id
-    from t
-    """

@@ -44,6 +44,12 @@ from pyspark.sql import functions as F
 
 from ..functions.caching import plan_cache
 from ..functions.text import tokens_col, tokens_sql
+from ..sources.generations import (
+    fold_ledger,
+    ledger_buckets,
+    net_ledger,
+    write_ledger,
+)
 
 #: canonical BM25 constants. Both literals parse to the identical
 #: IEEE double in the JVM and DuckDB (correctly-rounded decimal
@@ -208,6 +214,7 @@ def _score_postings(
 STATS_TOKEN = "\n"
 _STATS_N_DOCS = 0  # sentinel doc_id carrying the signed doc count
 _STATS_TOTAL_TOKENS = 1  # sentinel doc_id carrying signed Σ dl
+_POSTING_KEYS = ["token", "doc_id", "dl"]
 
 
 def _index_rows(docs: DataFrame, sign: int) -> tuple[DataFrame, DataFrame]:
@@ -267,22 +274,15 @@ def write_postings_index(
     buckets, and :func:`apply_changes_to_postings_index` folds daily
     change-feed batches at batch cost (postings are per-(token, doc)
     additive under signed deltas — the TS1/SM3 ledger discipline)."""
-    from ..sources.lakehouse import drop_table_and_orphan, write_bucketed
+    from ..sources.lakehouse import drop_table_and_orphan
 
-    spark = docs.sparkSession
-    drop_table_and_orphan(spark, table)
     # migrate cleanly over the retired two-table layout: a stale
     # side table must not keep serving the OLD corpus's totals to
     # anything still reading it
-    drop_table_and_orphan(spark, f"{table}_stats")
+    drop_table_and_orphan(docs.sparkSession, f"{table}_stats")
     rows, tokd = _index_rows(docs, 1)
     try:
-        write_bucketed(
-            rows.withColumn("gen", F.lit(0).cast("int")),
-            table,
-            "token",
-            table_buckets,
-        )
+        write_ledger(rows, table, "token", table_buckets)
     finally:
         tokd.unpersist()
 
@@ -299,20 +299,7 @@ def apply_changes_to_postings_index(
     batch-sized end-to-end — the index is never read. Replays
     collapse (full-row distinct per gen at read, the TS1 rule);
     ``gen`` must uniquely identify the batch."""
-    if gen <= 0:
-        raise ValueError(f"gen must be > 0 (got {gen}); 0 is the base build")
-    from ..sources.lakehouse import (
-        CDF_DEAD_TYPES,
-        CDF_LIVE_TYPES,
-        _bucket_spec,
-        write_bucketed,
-    )
-
-    table_buckets, bcols, _, _ = _bucket_spec(spark, table)
-    if bcols != ["token"]:
-        raise ValueError(
-            f"{table} is not a postings index (buckets {bcols})"
-        )
+    table_buckets = ledger_buckets(spark, table, "token", "postings index")
     # refuse to fold into an old-layout/foreign table: without base
     # sentinels the delta-only totals would serve wrong idf silently
     # (the check is one bucket-pruned scan of the sentinel bucket)
@@ -327,34 +314,21 @@ def apply_changes_to_postings_index(
             f"{table} has no totals sentinels — not a (current-layout) "
             "postings index; rebuild with write_postings_index"
         )
-    changes = changes.localCheckpoint()
-    dead = changes.filter(F.col("_change_type").isin(*CDF_DEAD_TYPES)).select(
-        "doc_id", "text"
-    )
-    live = changes.filter(F.col("_change_type").isin(*CDF_LIVE_TYPES)).select(
-        "doc_id", "text"
-    )
-    live_rows, tokd_live = _index_rows(live, 1)
-    dead_rows, tokd_dead = _index_rows(dead, -1)
-    delta = (
-        live_rows.unionByName(dead_rows)
-        .groupBy("token", "doc_id", "dl")
-        .agg(F.sum("tf").alias("tf"))
-        .filter(F.col("tf") != 0)
-        .withColumn("gen", F.lit(gen).cast("int"))
-    )
+    held = []
+
+    def deltas(docs: DataFrame, sign: int) -> DataFrame:
+        rows, tokd = _index_rows(docs, sign)
+        held.append(tokd)
+        return rows
+
     try:
-        write_bucketed(delta, table, "token", table_buckets, mode="append")
-        # the append may have executed through a DIFFERENT session's
-        # write path (foreachBatch hands the fold a clone-session
-        # batch frame; saveAsTable invalidates only the writing
-        # session's relation cache) — refresh the caller's view so a
-        # streaming maintenance loop's serving reads see the new
-        # generation immediately
-        spark.catalog.refreshTable(table)
+        fold_ledger(
+            spark, changes, table, gen, deltas,
+            _POSTING_KEYS, ["tf"], table_buckets,
+        )
     finally:
-        tokd_live.unpersist()
-        tokd_dead.unpersist()
+        for tokd in held:
+            tokd.unpersist()
 
 
 def bm25_topk_indexed(
@@ -392,13 +366,14 @@ def bm25_topk_indexed(
     # the token bucket spec); a doc deleted by a fold nets to tf <= 0
     # and drops here.
     posting = (
-        spark.table(table)
-        .filter(F.col("token").isin(vocab))
-        .distinct()
-        .groupBy("token", "doc_id", "dl")
-        .agg(F.sum("tf").alias("_tf"))
-        .filter(F.col("_tf") > 0)
-        .select("doc_id", F.col("dl").alias("_dl"), "token", "_tf")
+        net_ledger(
+            spark.table(table).filter(F.col("token").isin(vocab)),
+            _POSTING_KEYS, ["tf"],
+        )
+        .filter(F.col("tf") > 0)
+        .select(
+            "doc_id", F.col("dl").alias("_dl"), "token", F.col("tf").alias("_tf")
+        )
     )
     # corpus totals from the in-ledger sentinel rows: a bucket-pruned
     # EQUALITY filter (STATS_TOKEN is whitespace — no real token can

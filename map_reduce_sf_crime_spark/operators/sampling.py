@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import HEX_DIGITS, hash64_col, hash64_sql
 from ..functions.caching import plan_cache
-from ..sources.lakehouse import CDF_DEAD_TYPES, CDF_LIVE_TYPES
+from ..sources.generations import (
+    compact_ledger,
+    fold_ledger,
+    ledger_buckets,
+    net_ledger,
+    write_ledger,
+)
 
 #: per-mille keep rates by language stratum; default applies to any
 #: stratum not listed (forward-compatible with new corpus languages)
@@ -1060,6 +1066,7 @@ def gumbel_topk_flags(
 #: constant B) in d_rc so readers can't mis-smooth a ledger built
 #: with a different featurization
 _DSIR_STAMP_KEY = -1
+_DSIR_SUMS = ["d_tc", "d_rc"]
 
 
 def _dsir_deltas(
@@ -1108,25 +1115,15 @@ def write_dsir_stats(
     folds must evaluate the same predicate over their change rows —
     feeding a different one is the caller's corruption (a Column
     can't be stored; the stamp protects the other parameter, B)."""
-    from ..sources.lakehouse import drop_table_and_orphan, write_bucketed
-
-    spark = docs.sparkSession
-    drop_table_and_orphan(spark, table)
-    base = (
-        _dsir_deltas(docs, target, 1, n_buckets)
-        .unionByName(_dsir_stamp(spark, n_buckets))
-        .withColumn("gen", F.lit(0).cast("int"))
+    base = _dsir_deltas(docs, target, 1, n_buckets).unionByName(
+        _dsir_stamp(docs.sparkSession, n_buckets)
     )
-    write_bucketed(base, table, "_bucket", table_buckets)
+    write_ledger(base, table, "_bucket", table_buckets)
 
 
 def _dsir_spec(spark, table: str) -> tuple[int, int]:
     """(table_buckets, feature_buckets) — validates the stamp."""
-    from ..sources.lakehouse import _bucket_spec
-
-    table_buckets, bcols, _, _ = _bucket_spec(spark, table)
-    if bcols != ["_bucket"]:
-        raise ValueError(f"{table} is not a DSIR ledger (buckets {bcols})")
+    table_buckets = ledger_buckets(spark, table, "_bucket", "DSIR ledger")
     stamp = (
         spark.table(table)
         .filter(F.col("_bucket") == _DSIR_STAMP_KEY)
@@ -1149,26 +1146,12 @@ def apply_changes_to_dsir_stats(
     (> 0; replay-collapsed by full-row distinct like TS1). Deletes and
     update pre-images subtract, inserts and post-images add; ``target``
     must be the base build's predicate evaluated over the change rows."""
-    if gen <= 0:
-        raise ValueError(f"gen must be > 0 (got {gen}); 0 is the base build")
-    from ..sources.lakehouse import write_bucketed
-
     table_buckets, n_buckets = _dsir_spec(spark, table)
-    changes = changes.localCheckpoint()
-    dead = changes.filter(F.col("_change_type").isin(*CDF_DEAD_TYPES))
-    live = changes.filter(F.col("_change_type").isin(*CDF_LIVE_TYPES))
-    delta = (
-        _dsir_deltas(live, target, 1, n_buckets)
-        .unionByName(_dsir_deltas(dead, target, -1, n_buckets))
-        .groupBy("_bucket")
-        .agg(F.sum("d_tc").alias("d_tc"), F.sum("d_rc").alias("d_rc"))
-        .filter((F.col("d_tc") != 0) | (F.col("d_rc") != 0))
-        .withColumn("gen", F.lit(gen).cast("int"))
+    fold_ledger(
+        spark, changes, table, gen,
+        lambda docs, sign: _dsir_deltas(docs, target, sign, n_buckets),
+        ["_bucket"], _DSIR_SUMS, table_buckets,
     )
-    write_bucketed(delta, table, "_bucket", table_buckets, mode="append")
-    # cross-session cache coherence (see retrieval fold): a clone-
-    # session append must become visible to the caller's reads
-    spark.catalog.refreshTable(table)
 
 
 def dsir_scores_cataloged(
@@ -1188,12 +1171,14 @@ def dsir_scores_cataloged(
 
     _, n_buckets = _dsir_spec(spark, table)
     led = (
-        spark.table(table)
-        .distinct()  # replay collapse (bucketed scan: no shuffle)
-        .filter(F.col("_bucket") != _DSIR_STAMP_KEY)
-        .groupBy("_bucket")
-        .agg(F.sum("d_tc").alias("_tc"), F.sum("d_rc").alias("_rc"))
-        .filter(F.col("_rc") != 0)
+        net_ledger(
+            spark.table(table).filter(F.col("_bucket") != _DSIR_STAMP_KEY),
+            ["_bucket"], _DSIR_SUMS,
+        )
+        .filter(F.col("d_rc") != 0)
+        .select(
+            "_bucket", F.col("d_tc").alias("_tc"), F.col("d_rc").alias("_rc")
+        )
         .transform(plan_cache)
     )
     totals = led.agg(F.sum("_rc").alias("_R"), F.sum("_tc").alias("_T"))
@@ -1250,22 +1235,11 @@ def dsir_scores_cataloged(
 
 def compact_dsir_stats(spark, table: str) -> None:
     """Collapse the ledger back to generation 0 (net live counts +
-    the stamp) — bounded read amplification after many folds; same
-    replay-window truncation rule as compact_term_stats."""
-    from ..sources.lakehouse import write_bucketed
-
-    table_buckets, n_buckets = _dsir_spec(spark, table)
-    led = spark.table(table).distinct()
-    base = (
-        led.filter(F.col("_bucket") != _DSIR_STAMP_KEY)
-        .groupBy("_bucket")
-        .agg(F.sum("d_tc").alias("d_tc"), F.sum("d_rc").alias("d_rc"))
-        .filter((F.col("d_tc") != 0) | (F.col("d_rc") != 0))
-        .unionByName(_dsir_stamp(spark, n_buckets))
-        .withColumn("gen", F.lit(0).cast("int"))
-        .localCheckpoint()  # the write overwrites the table it reads
-    )
-    write_bucketed(base, table, "_bucket", table_buckets)
+    the stamp, whose one row nets to itself) — bounded read
+    amplification after many folds; same crash contract and
+    replay-window truncation as compact_term_stats."""
+    table_buckets, _ = _dsir_spec(spark, table)
+    compact_ledger(spark, table, ["_bucket"], _DSIR_SUMS, table_buckets)
 
 
 def stratified_sample_sql(

@@ -30,7 +30,13 @@ from pyspark.sql import functions as F
 from ..functions.caching import plan_cache
 from ..functions.hashing import hash64_col, hash64_sql
 from ..functions.vectors import cosine_col, cosine_sql
-from ..sources.lakehouse import CDF_DEAD_TYPES, CDF_LIVE_TYPES
+from ..sources.generations import (
+    check_gen,
+    drop_dead,
+    recover_dir,
+    split_changes,
+    swap_dir,
+)
 
 DIM = 64
 # 32 planes in 8 × 4-bit bands: tuned on the fixture's near-orthogonal
@@ -732,10 +738,7 @@ def append_ivf_index(batch: DataFrame, path: str, append_id: int) -> None:
     degrades recall, not correctness — rebuild (or re-``refine``) the
     quantizer on a maintenance cadence, which is a full
     :func:`write_ivf_index` with a fresh ``append_id=0`` layout."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
+    check_gen(append_id, "append_id")
     spark = batch.sparkSession
     lists = ivf_assignments(
         batch, centroids=_stored_centroids(spark, path), with_embedding=True
@@ -771,9 +774,6 @@ def _write_list_partitions(df: DataFrame, dest: str, static: bool = False):
 
 
 _TOMBSTONES = "_tombstones"
-#: read_changes vocabulary → which side of the index fold each event
-#: lands on (pre-images and deletes kill the stored copy; post-images
-#: and inserts are the batch to append).
 
 
 def tombstone_index(
@@ -802,10 +802,7 @@ def tombstone_index(
     never corpus size), which is why the probe-side filter may
     broadcast it; a rebuild (``write_ivf_index`` / ``write_pq_index``)
     clears it along with the lists."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
+    check_gen(append_id, "append_id")
     if not isinstance(vec_ids, DataFrame):
         vec_ids = spark.createDataFrame(
             [(int(v),) for v in vec_ids], "vec_id long"
@@ -866,40 +863,35 @@ def _read_probed_lists(
 def _filter_tombstones(
     spark, path: str, rows: DataFrame, sub: str = "lists"
 ) -> DataFrame:
-    """Probe-side tombstone filter: drop index rows whose ``vec_id``
-    is dead as of a generation AFTER the row's own ``append_id``.
-    No-op when the index has none. One broadcast left join against
-    the churn-sized max-generation set — the pruned lists/codes scan
-    is never shuffled."""
+    """Probe-side tombstone filter over the ``{sub}/_tombstones`` set
+    (``generations.drop_dead`` keyed on ``vec_id``/``append_id``);
+    no-op when the index has none."""
     from ..sources.lakehouse import _hfs
 
     fs, jvm = _hfs(spark, path)
     tpath = f"{path.rstrip('/')}/{sub}/{_TOMBSTONES}"
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(tpath)):
-        return rows
     dead = (
         spark.read.parquet(tpath)
-        .groupBy("vec_id")
-        .agg(F.max("append_id").alias("_dead_as_of"))
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(tpath))
+        else None
     )
-    return (
-        rows.join(F.broadcast(dead), "vec_id", "left")
-        .filter(
-            F.col("_dead_as_of").isNull()
-            | (F.col("append_id") >= F.col("_dead_as_of"))
-        )
-        .drop("_dead_as_of")
-    )
+    return drop_dead(rows, dead, "vec_id", "append_id", "append_id")
 
 
-def _split_changes(changes: DataFrame, id_col: str, emb_col: str):
-    dead = changes.filter(
-        F.col("_change_type").isin(*CDF_DEAD_TYPES)
-    ).select(F.col(id_col).alias("vec_id"))
-    live = changes.filter(
-        F.col("_change_type").isin(*CDF_LIVE_TYPES)
-    ).select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding"))
-    return dead, live
+def _fold_ann(spark, path, changes, append_id, id_col, emb_col, sub, append):
+    """The ANN indexes' change-feed fold: the dead half tombstones the
+    stored copies under ``{sub}``, the live half is ``append``-ed under
+    the same ``append_id`` (an update's post-image survives its own
+    tombstone by the generation-scoping rule)."""
+    dead, live = split_changes(changes)
+    dead = dead.select(F.col(id_col).alias("vec_id"))
+    live = live.select(
+        F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
+    )
+    if dead.take(1):
+        tombstone_index(spark, path, dead, append_id, sub=sub)
+    if live.take(1):
+        append(live, path, append_id)
 
 
 def apply_changes_to_ivf_index(
@@ -920,15 +912,11 @@ def apply_changes_to_ivf_index(
     legs (one narrow assignment map + two batch-sized writes); the
     base lists are never re-read or rewritten — the index twin of the
     feed's own contract that incremental work reads the churn, not
-    the table. The feed is localCheckpoint-ed first: its plan is a
-    snapshot join, and the two probes + two writes below would
-    otherwise re-run it four times."""
-    changes = changes.localCheckpoint()
-    dead, live = _split_changes(changes, id_col, emb_col)
-    if dead.take(1):
-        tombstone_index(spark, path, dead, append_id, sub="lists")
-    if live.take(1):
-        append_ivf_index(live, path, append_id)
+    the table."""
+    _fold_ann(
+        spark, path, changes, append_id, id_col, emb_col, "lists",
+        append_ivf_index,
+    )
 
 
 def apply_changes_to_pq_index(
@@ -942,12 +930,10 @@ def apply_changes_to_pq_index(
     """PQ twin of :func:`apply_changes_to_ivf_index`: same fold, same
     replay contract, with the live half encoded by the index's stored
     codebooks via :func:`append_pq_index`."""
-    changes = changes.localCheckpoint()
-    dead, live = _split_changes(changes, id_col, emb_col)
-    if dead.take(1):
-        tombstone_index(spark, path, dead, append_id, sub="codes")
-    if live.take(1):
-        append_pq_index(live, path, append_id)
+    _fold_ann(
+        spark, path, changes, append_id, id_col, emb_col, "codes",
+        append_pq_index,
+    )
 
 
 def compact_ivf_index(spark, path: str) -> None:
@@ -989,65 +975,35 @@ def compact_pq_index(spark, path: str) -> None:
 def _compact_index_dir(
     spark, path: str, sub: str, part_cols: tuple[str, ...]
 ) -> None:
-    from ..sources.lakehouse import _hfs
-
     root = path.rstrip("/")
-    recover_index_compaction(spark, path, sub)
-    fs, jvm = _hfs(spark, root)
-    P = jvm.org.apache.hadoop.fs.Path
-    rows = _filter_tombstones(
-        spark, root, spark.read.parquet(f"{root}/{sub}"), sub
-    ).withColumn("append_id", F.lit(0))
-    # the .compact dir carries merged gen-0 rows and NO _tombstones —
-    # the swap below retires both the old rows and the old tombstones
-    # in one rename. Centroid-partitioned trees re-cluster to one file
-    # per list (_write_list_partitions — compaction is exactly the
-    # moment to reclaim file-count amplification); the flat code table
-    # keeps input-coalesced tasks (one dir, file count already small).
-    if "centroid_id" in part_cols:
-        _write_list_partitions(rows, f"{root}/{sub}.compact", static=True)
-    else:
-        rows.write.mode("overwrite").partitionBy(
-            *part_cols, "append_id"
-        ).parquet(f"{root}/{sub}.compact")
-    if not fs.rename(P(f"{root}/{sub}"), P(f"{root}/{sub}.old")):
-        raise IOError(f"compact: rename {sub} -> {sub}.old failed")
-    if not fs.rename(P(f"{root}/{sub}.compact"), P(f"{root}/{sub}")):
-        raise IOError(f"compact: rename {sub}.compact -> {sub} failed")
-    fs.delete(P(f"{root}/{sub}.old"), True)
+    base = f"{root}/{sub}"
+
+    def write(stage: str) -> None:
+        # the stage carries merged gen-0 rows and NO _tombstones — the
+        # swap retires both the old rows and the old tombstones in one
+        # rename. Centroid-partitioned trees re-cluster to one file
+        # per list (compaction is exactly the moment to reclaim
+        # file-count amplification); the flat code table keeps
+        # input-coalesced tasks (one dir, file count already small).
+        rows = _filter_tombstones(
+            spark, root, spark.read.parquet(base), sub
+        ).withColumn("append_id", F.lit(0))
+        if "centroid_id" in part_cols:
+            _write_list_partitions(rows, stage, static=True)
+        else:
+            rows.write.mode("overwrite").partitionBy(
+                *part_cols, "append_id"
+            ).parquet(stage)
+
+    swap_dir(spark, base, f"index {sub}", write)
 
 
 def recover_index_compaction(spark, path: str, sub: str) -> str:
     """Resolve any crash residue of :func:`compact_ivf_index` /
-    :func:`compact_pq_index` — idempotent, also runs as the
-    compactors' own pre-clean. Returns what it did."""
-    from ..sources.lakehouse import _hfs
-
-    root = path.rstrip("/")
-    fs, jvm = _hfs(spark, root)
-    P = jvm.org.apache.hadoop.fs.Path
-    live, old, cmp_ = (
-        fs.exists(P(f"{root}/{sub}")),
-        fs.exists(P(f"{root}/{sub}.old")),
-        fs.exists(P(f"{root}/{sub}.compact")),
-    )
-    if live and not old:
-        if cmp_:  # crashed mid/post write, before any rename
-            fs.delete(P(f"{root}/{sub}.compact"), True)
-            return "discarded partial rewrite"
-        return "clean"
-    if not live and old and cmp_:  # crashed between the two renames
-        if not fs.rename(P(f"{root}/{sub}.compact"), P(f"{root}/{sub}")):
-            raise IOError(f"recover: rename {sub}.compact -> {sub} failed")
-        fs.delete(P(f"{root}/{sub}.old"), True)
-        return "finished swap"
-    if live and old:  # crashed before cleanup
-        fs.delete(P(f"{root}/{sub}.old"), True)
-        return "finished cleanup"
-    raise RuntimeError(
-        f"unrecoverable index state at {root}/{sub}: "
-        f"live={live} old={old} compact={cmp_}"
-    )
+    :func:`compact_pq_index` (``generations.recover_dir``) —
+    idempotent, also runs as the compactors' own pre-clean. Returns
+    what it did."""
+    return recover_dir(spark, f"{path.rstrip('/')}/{sub}", f"index {sub}")
 
 
 def ivf_topk_indexed(
@@ -1724,10 +1680,7 @@ def append_pq_index(batch: DataFrame, path: str, append_id: int) -> None:
     while re-appending under a DIFFERENT id is caller error.
     Codebook drift as the corpus grows degrades recall only; retrain
     on a maintenance cadence via a fresh :func:`write_pq_index`."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
+    check_gen(append_id, "append_id")
     spark = batch.sparkSession
     books = _stored_codebooks(spark, path)
     (
@@ -2123,20 +2076,18 @@ def _stored_store_buckets(spark, path: str) -> int:
     )
 
 
-def _write_store_rows(
-    rows: DataFrame, path: str, n_buckets: int, sub: str = "rows"
-) -> None:
+def _write_store_rows(rows: DataFrame, dest: str, n_buckets: int) -> None:
     """One file per (bucket, write): repartition by bucket before the
     hive-partitioned write — the `_write_list_partitions` lesson (a
     32-task write into 512 dirs otherwise leaves ~16k files whose
-    listing cost dwarfs what the pruning saves). ``sub`` lets the
-    compaction stage into a sibling directory for its rename-swap."""
+    listing cost dwarfs what the pruning saves). ``dest`` is the
+    store's ``rows`` dir, or the compaction's stage next to it."""
     (
         rows.withColumn("bucket", _store_bucket_col(n_buckets))
         .repartition(F.col("bucket"))
         .write.mode("append")
         .partitionBy("bucket")
-        .parquet(f"{path.rstrip('/')}/{sub}")
+        .parquet(dest)
     )
 
 
@@ -2170,7 +2121,7 @@ def write_vector_store(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(emb_col).alias("embedding"),
     ).withColumn("gen", F.lit(0).cast("int"))
-    _write_store_rows(rows, path, n_buckets)
+    _write_store_rows(rows, f"{path.rstrip('/')}/rows", n_buckets)
     emb_t = rows.schema["embedding"].dataType.simpleString()
     spark.createDataFrame(
         [(n_buckets, emb_t)], "n_buckets int, emb_type string"
@@ -2197,102 +2148,40 @@ def apply_changes_to_vector_store(
     unchanged (exactly-once end to end). Bucket routing comes from
     the STORED stamp, never a caller argument (a mismatched count
     would route ids to directories their rows aren't in)."""
-    if gen <= 0:
-        raise ValueError(f"gen must be > 0 (got {gen}); 0 is the base build")
+    check_gen(gen)
     n_buckets = _stored_store_buckets(spark, path)
     emb_t = changes.schema[emb_col].dataType
-    live = changes.filter(F.col("_change_type").isin(*CDF_LIVE_TYPES)).select(
+    dead, live = split_changes(changes)
+    live = live.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(emb_col).alias("embedding"),
     )
-    dead = changes.filter(F.col("_change_type").isin(*CDF_DEAD_TYPES)).select(
+    dead = dead.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.lit(None).cast(emb_t).alias("embedding"),
     )
     delta = live.unionByName(dead).withColumn("gen", F.lit(gen).cast("int"))
-    _write_store_rows(delta, path, n_buckets)
-
-
-def _fs_must(ok: bool, what: str) -> None:
-    """Hadoop FileSystem.delete/rename report failure by RETURNING
-    false, not raising — an ignored false turns into silent layout
-    corruption (a rename into an existing destination nests the
-    source INSIDE it). Every swap step checks."""
-    if not ok:
-        raise IOError(f"filesystem operation failed: {what}")
+    _write_store_rows(delta, f"{path.rstrip('/')}/rows", n_buckets)
 
 
 def compact_vector_store(spark, path: str) -> None:
     """Collapse the fold line back to gen 0: latest live row per id
-    (dead ids physically dropped), rewritten as one file per bucket.
-
-    CRASH ORDERING — RENAME-ASIDE, never delete-then-rename: the
-    netted rows are STAGED to ``rows.compact`` (reading the live
-    ``rows`` tree, writing next to it), then ``rows`` is renamed
-    aside to ``rows.old``, the stage renamed in, and ``rows.old``
-    deleted last. Renames are single metadata operations; a recursive
-    DELETE of a multi-bucket tree is not atomic (the round-9 review:
-    delete-then-rename left a window where a crash mid-delete plus
-    the 'stale stage' cleanup destroyed the only complete copy), so
-    no step of this ordering ever has the store's only complete copy
-    inside a non-atomic operation. Recovery by state, run this
-    function again: stage partial + rows live → stage cleared,
-    recompacted; rows renamed aside but stage not yet in → the stage
-    (complete by ordering) renames in, old cleared; new rows in but
-    old not yet deleted → old cleared. Every fs.rename/delete return
-    code is checked (:func:`_fs_must`).
-
-    SINGLE WRITER REQUIRED: compaction assumes it owns the store tree
-    for the duration of the call (the maintenance-cadence shape —
-    one scheduled compactor per store). Two CONCURRENT compactions
-    race destructively: run B's stale-leftover cleanup can delete
-    run A's completed ``rows.compact`` stage mid-swap, making A's
-    rename(stage→base) fail after ``rows`` was already renamed aside
-    — a torn old-only state until the next run heals it. A hard lock
-    file is deliberately NOT used: recovery-by-rerun after a crash is
-    part of the contract above, and a stale lock would block exactly
-    that rerun. Serves may run concurrently with one compactor (the
-    rename ordering keeps a complete copy visible throughout);
-    compactors may not run concurrently with each other."""
-    from ..sources.lakehouse import _hfs
-
+    (dead ids physically dropped), rewritten as one file per bucket
+    and swapped in by ``generations.swap_dir`` — the netted rows are
+    staged to ``rows.compact`` next to the live ``rows`` tree, which
+    is renamed aside, never deleted before the stage is in. A re-run
+    heals every crash residue; a store with no rows raises. Single
+    compactor per store (serves may run concurrently)."""
     n_buckets = _stored_store_buckets(spark, path)
     base = f"{path.rstrip('/')}/rows"
-    stage = f"{path.rstrip('/')}/rows.compact"
-    old = f"{path.rstrip('/')}/rows.old"
-    fs, jvm = _hfs(spark, base)
-    P = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(P(base)):
-        # torn swap from a prior crash, mid-window: rows was renamed
-        # aside and the stage (complete by the ordering above — it is
-        # only renamed in whole) hasn't landed yet
-        if fs.exists(P(stage)):
-            _fs_must(fs.rename(P(stage), P(base)), f"rename {stage} -> {base}")
-        elif fs.exists(P(old)):
-            # stage already renamed in and back out? unreachable by
-            # the ordering — but an old-only state still restores
-            _fs_must(fs.rename(P(old), P(base)), f"rename {old} -> {base}")
-        else:
-            raise ValueError(f"no vector store rows at {base}")
-    for leftover in (stage, old):  # stale stage / aside from a crash
-        if fs.exists(P(leftover)):
-            _fs_must(fs.delete(P(leftover), True), f"delete {leftover}")
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("gen"), F.asc(F.col("embedding").isNull().cast("int"))
-    )
-    netted = (
-        spark.read.parquet(base)
-        .drop("bucket")
-        .distinct()
-        .withColumn("_r", F.row_number().over(w))
-        .filter((F.col("_r") == 1) & F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
-        .withColumn("gen", F.lit(0).cast("int"))
-    )
-    _write_store_rows(netted, path, n_buckets, sub="rows.compact")
-    _fs_must(fs.rename(P(base), P(old)), f"rename {base} -> {old}")
-    _fs_must(fs.rename(P(stage), P(base)), f"rename {stage} -> {base}")
-    _fs_must(fs.delete(P(old), True), f"delete {old}")
+
+    def write(stage: str) -> None:
+        netted = _latest_live(
+            spark.read.parquet(base).drop("bucket").distinct()
+        ).withColumn("gen", F.lit(0).cast("int"))
+        _write_store_rows(netted, stage, n_buckets)
+
+    swap_dir(spark, base, "vector store rows", write)
 
 
 def _store_vectors(spark, path: str, vec_ids) -> DataFrame:
@@ -2699,10 +2588,7 @@ def append_ivfpq_index(batch: DataFrame, path: str, append_id: int) -> None:
     contract as :func:`append_ivf_index`: deterministic, so a re-run
     with the same id overwrites its own partitions with identical
     bytes; re-appending under a different id duplicates."""
-    if append_id <= 0:
-        raise ValueError(
-            f"append_id must be > 0 (got {append_id}); 0 is the base build"
-        )
+    check_gen(append_id, "append_id")
     spark = batch.sparkSession
     cq = _stored_centroids(spark, path)
     coded = _assign_and_encode(
@@ -2728,12 +2614,10 @@ def apply_changes_to_ivfpq_index(
     update pre-images tombstone (the lists share the generation-scoped
     ``_tombstones`` layout), inserts + post-images append through
     :func:`append_ivfpq_index`. Churn-sized, replay-idempotent."""
-    changes = changes.localCheckpoint()
-    dead, live = _split_changes(changes, id_col, emb_col)
-    if dead.take(1):
-        tombstone_index(spark, path, dead, append_id, sub="lists")
-    if live.take(1):
-        append_ivfpq_index(live, path, append_id)
+    _fold_ann(
+        spark, path, changes, append_id, id_col, emb_col, "lists",
+        append_ivfpq_index,
+    )
 
 
 def compact_ivfpq_index(spark, path: str) -> None:

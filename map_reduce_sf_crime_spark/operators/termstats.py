@@ -19,7 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, tokens_sql
-from ..sources.lakehouse import CDF_DEAD_TYPES, CDF_LIVE_TYPES
+from ..sources.generations import (
+    compact_ledger,
+    fold_ledger,
+    ledger_buckets,
+    net_ledger,
+    write_ledger,
+)
 
 
 def token_doc_freq(
@@ -225,10 +231,7 @@ def token_doc_freq_sql(top_k: int = 50) -> str:
 # generation-scoped tombstones dedup uses).
 # ---------------------------------------------------------------------------
 
-#: read_changes vocabulary → which sign a row's token counts
-#: contribute to the ledger.
-
-_TS_SCHEMA_HINT = "token string, d_df long, d_tf long, d_docs long, gen int"
+_TS_SUMS = ["d_df", "d_tf", "d_docs"]
 
 
 def _term_deltas(docs: DataFrame, sign: int) -> DataFrame:
@@ -265,14 +268,7 @@ def write_term_stats(docs: DataFrame, table: str, n_buckets: int = 16) -> None:
     """Build the persisted term-stats ledger from scratch: the whole
     corpus's counts land as generation 0. One full tokenize — the
     cost every later fold exists to avoid paying again."""
-    from ..sources.lakehouse import drop_table_and_orphan, write_bucketed
-
-    spark = docs.sparkSession
-    drop_table_and_orphan(spark, table)
-    write_bucketed(
-        _term_deltas(docs, 1).withColumn("gen", F.lit(0).cast("int")),
-        table, "token", n_buckets,
-    )
+    write_ledger(_term_deltas(docs, 1), table, "token", n_buckets)
 
 
 def apply_changes_to_term_stats(
@@ -295,59 +291,22 @@ def apply_changes_to_term_stats(
     batch is the caller's corruption. Fold equivalence with a
     from-scratch rebuild on the post-change corpus is pinned in
     tests/test_text_functions.py."""
-    if gen <= 0:
-        raise ValueError(f"gen must be > 0 (got {gen}); 0 is the base build")
-    from ..sources.lakehouse import _bucket_spec, write_bucketed
-
-    n_buckets, bcols, _, _ = _bucket_spec(spark, table)
-    if bcols != ["token"]:
-        raise ValueError(f"{table} is not a term-stats ledger (buckets {bcols})")
-    # the live and dead legs both read the feed; materialize its
-    # (join-shaped) plan once
-    changes = changes.localCheckpoint()
-    dead = changes.filter(F.col("_change_type").isin(*CDF_DEAD_TYPES)).select(
-        "doc_id", "text"
+    n_buckets = ledger_buckets(spark, table, "token", "term-stats ledger")
+    fold_ledger(
+        spark, changes, table, gen, _term_deltas, ["token"], _TS_SUMS, n_buckets
     )
-    live = changes.filter(F.col("_change_type").isin(*CDF_LIVE_TYPES)).select(
-        "doc_id", "text"
-    )
-    delta = (
-        _term_deltas(live, 1)
-        .unionByName(_term_deltas(dead, -1))
-        .groupBy("token")
-        .agg(
-            F.sum("d_df").alias("d_df"),
-            F.sum("d_tf").alias("d_tf"),
-            F.sum("d_docs").alias("d_docs"),
-        )
-        .filter(
-            (F.col("d_df") != 0) | (F.col("d_tf") != 0) | (F.col("d_docs") != 0)
-        )
-        .withColumn("gen", F.lit(gen).cast("int"))
-    )
-    write_bucketed(delta, table, "token", n_buckets, mode="append")
-    # cross-session cache coherence (see retrieval fold): a clone-
-    # session append must become visible to the caller's reads
-    spark.catalog.refreshTable(table)
-
-
-def _ledger(spark, table: str) -> DataFrame:
-    # full-row distinct = replay collapse: within one gen there is one
-    # row per token by construction, so the only exact-duplicate rows
-    # a ledger can hold are a crashed fold's re-appended copies. The
-    # bucketed scan satisfies the distinct's clustering — no shuffle.
-    return spark.table(table).distinct()
 
 
 def term_stats_cataloged(spark, table: str) -> DataFrame:
     """Live (token, df, tf) totals from the ledger: bucket-local
     groupBy-sum, tokens whose documents all died drop out."""
-    led = _ledger(spark, table)
     return (
-        led.filter(F.col("token").isNotNull())
-        .groupBy("token")
-        .agg(F.sum("d_df").alias("df"), F.sum("d_tf").alias("tf"))
-        .filter(F.col("df") > 0)
+        net_ledger(
+            spark.table(table).filter(F.col("token").isNotNull()),
+            ["token"], ["d_df", "d_tf"],
+        )
+        .filter(F.col("d_df") > 0)
+        .select("token", F.col("d_df").alias("df"), F.col("d_tf").alias("tf"))
     )
 
 
@@ -357,16 +316,14 @@ def token_doc_freq_cataloged(spark, table: str, top_k: int = 50) -> DataFrame:
     describes (same df_ppm integer discipline, same tie-break), so the
     live form's DuckDB oracle transfers unchanged to the maintained
     artifact."""
-    led = _ledger(spark, table)
-    stats = (
-        led.filter(F.col("token").isNotNull())
-        .groupBy("token")
-        .agg(F.sum("d_df").alias("df"), F.sum("d_tf").alias("tf"))
-        .filter(F.col("df") > 0)
+    total = (
+        spark.table(table)
+        .distinct()  # replay collapse
+        .agg(F.sum("d_docs").alias("n_docs"))
     )
-    total = led.agg(F.sum("d_docs").alias("n_docs"))
     return (
-        stats.crossJoin(F.broadcast(total))
+        term_stats_cataloged(spark, table)
+        .crossJoin(F.broadcast(total))
         .withColumn(
             "df_ppm",
             F.floor(F.col("df") * 1000000.0 / F.col("n_docs")).cast("long"),
@@ -381,29 +338,7 @@ def compact_term_stats(spark, table: str) -> None:
     """Collapse an accumulated ledger back to a single generation-0
     base (live totals only, dead tokens dropped) — the maintenance
     rewrite that keeps read amplification bounded after many folds.
-    Vocabulary-sized, never corpus-sized. NOTE: compaction truncates
-    the replay window — a pre-compaction fold re-run afterwards would
-    re-append its delta as new rows (the same line-truncation rule as
-    a catalog or index rebuild)."""
-    from ..sources.lakehouse import _bucket_spec, write_bucketed
-
-    n_buckets, _, _, _ = _bucket_spec(spark, table)
-    led = _ledger(spark, table)
-    base = (
-        led.filter(F.col("token").isNotNull())
-        .groupBy("token")
-        .agg(F.sum("d_df").alias("d_df"), F.sum("d_tf").alias("d_tf"))
-        .filter((F.col("d_df") != 0) | (F.col("d_tf") != 0))
-        .withColumn("d_docs", F.lit(0).cast("long"))
-        .unionByName(
-            led.agg(F.sum("d_docs").alias("d_docs")).select(
-                F.lit(None).cast("string").alias("token"),
-                F.lit(0).cast("long").alias("d_df"),
-                F.lit(0).cast("long").alias("d_tf"),
-                "d_docs",
-            )
-        )
-        .withColumn("gen", F.lit(0).cast("int"))
-        .localCheckpoint()  # the write overwrites the table it reads
-    )
-    write_bucketed(base, table, "token", n_buckets)
+    Vocabulary-sized, never corpus-sized; crash-safe and replay-window
+    truncating as ``generations.compact_ledger`` describes."""
+    n_buckets = ledger_buckets(spark, table, "token", "term-stats ledger")
+    compact_ledger(spark, table, ["token"], _TS_SUMS, n_buckets)

@@ -114,11 +114,3 @@ def undecodable_count(wire: DataFrame) -> DataFrame:
     return d.filter(~_valid(F.col("e"))).agg(
         F.count(F.lit(1)).alias("n_undecodable")
     )
-
-
-def kafka_events_stream(
-    spark: SparkSession, bootstrap_servers: str, topic: str
-) -> DataFrame:
-    """The production composition: load the Kafka source and decode to
-    the events schema — drop-in for ``sources.parquet.events_stream``."""
-    return decode_events(kafka_events_reader(spark, bootstrap_servers, topic).load())

@@ -30,6 +30,8 @@ reference's truncate-then-insert (K4), without its read-gap.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1619,31 +1621,12 @@ def compact_bucketed(
     No-op (returns 0) when the table already has ≤ ``files_per_bucket``
     files per bucket.
 
-    Crash contract (single writer, like the commit manifest): each
-    window is recoverable and re-running is always safe —
-
-    - before the first rename: a stray ``__compact`` table; the next
-      run overwrites it.
-    - between the renames: ``{table}`` is briefly ABSENT (the one
-      non-atomic window two metastore renames can't close — a real
-      table format's transaction log is the upgrade);
-      :func:`recover_bucketed_compaction` restores it from whichever
-      of ``__old``/``__compact`` survived, preferring the compacted
-      copy.
-    - after the second rename: a stray ``__old``; recovery (or the
-      next run) drops it.
-
-    Returns the number of files removed by the rewrite."""
+    Crash contract: :func:`swap_rewrite`'s. Returns the number of
+    files removed by the rewrite."""
     n_buckets, bucket_cols, sort_cols, location = _bucket_spec(spark, table)
     before = _table_file_count(spark, location)
     if before <= files_per_bucket * n_buckets:
         return 0
-    tmp, old = f"{table}__compact", f"{table}__old"
-    for t in (tmp, old):
-        # a crash DURING a previous run's tmp write leaves an
-        # orphaned location no drop clears — adopt-refusal would
-        # otherwise wedge every later compaction
-        drop_table_and_orphan(spark, t)
     # One file per bucket with ZERO shuffle: force the BUCKETED scan.
     # The planner's auto choice disables it here (no join/agg wants
     # the distribution) while the optimizer simultaneously drops a
@@ -1656,29 +1639,71 @@ def compact_bucketed(
     # the bucketed writer emits exactly one file per bucket and the
     # whole compaction is a narrow read→write, no exchange at all.
     auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key)
-    spark.conf.set(auto_key, "false")
-    try:
-        w = spark.table(table).write.bucketBy(n_buckets, *bucket_cols)
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.format("parquet").mode("overwrite").saveAsTable(tmp)
-    finally:
-        spark.conf.set(auto_key, prev_auto)
-    _, _, _, tmp_loc = _bucket_spec(spark, tmp)
-    after = _table_file_count(spark, tmp_loc)
+
+    def rewrite(tmp: str) -> None:
+        prev_auto = spark.conf.get(auto_key)
+        spark.conf.set(auto_key, "false")
+        try:
+            w = spark.table(table).write.bucketBy(n_buckets, *bucket_cols)
+            if sort_cols:
+                w = w.sortBy(*sort_cols)
+            w.format("parquet").mode("overwrite").saveAsTable(tmp)
+        finally:
+            spark.conf.set(auto_key, prev_auto)
+
+    swap_rewrite(spark, table, rewrite)
+    return before - _table_file_count(spark, _bucket_spec(spark, table)[3])
+
+
+def swap_rewrite(
+    spark: SparkSession, table: str, rewrite: Callable[[str], None]
+) -> None:
+    """Replace the metastore table ``table`` with a rewrite of it:
+    ``rewrite(tmp)`` writes the new copy as the table ``tmp`` =
+    ``{table}__compact`` (reading ``table`` is fine — it is untouched
+    until the write is complete), then two renames swap it in and the
+    old copy is dropped. The table-level twin of
+    ``generations.swap_dir``; the compaction of every bucketed store
+    (signature catalog, term-stats and DSIR ledgers) runs through it.
+
+    Crash contract (single writer, like the commit manifest): each
+    window is recoverable and re-running is always safe —
+
+    - before the first rename (including a FAILED rewrite): ``table``
+      is intact and a stray ``__compact`` is left; the next run or
+      :func:`recover_bucketed_compaction` drops it.
+    - between the renames: ``{table}`` is briefly ABSENT (the one
+      non-atomic window two metastore renames can't close — a real
+      table format's transaction log is the upgrade);
+      :func:`recover_bucketed_compaction` restores it from whichever
+      of ``__old``/``__compact`` survived, preferring the compacted
+      copy.
+    - after the second rename: a stray ``__old``; recovery (or the
+      next run) drops it."""
+    if not spark.catalog.tableExists(table):
+        raise ValueError(
+            f"{table} does not exist — run recover_bucketed_compaction "
+            "if a compaction crashed mid-swap"
+        )
+    tmp, old = f"{table}__compact", f"{table}__old"
+    for t in (tmp, old):
+        # a crash DURING a previous run's tmp write leaves an
+        # orphaned location no drop clears — adopt-refusal would
+        # otherwise wedge every later compaction
+        drop_table_and_orphan(spark, t)
+    rewrite(tmp)
     spark.sql(f"alter table {table} rename to {old}")
     spark.sql(f"alter table {tmp} rename to {table}")
     spark.sql(f"drop table {old}")
-    return before - after
 
 
 def recover_bucketed_compaction(spark: SparkSession, table: str) -> str:
-    """Restore ``table`` after a crash inside :func:`compact_bucketed`'s
-    rename window. Returns what was done: ``"intact"`` (nothing to
-    recover; stray helpers dropped), ``"recovered_compacted"`` (the
-    finished rewrite was promoted), or ``"recovered_original"`` (the
-    pre-compaction table was restored)."""
+    """Restore ``table`` after a crash inside :func:`swap_rewrite`'s
+    rename window (``compact_bucketed`` and the ledger compactions).
+    Returns what was done: ``"intact"`` (nothing to recover; stray
+    helpers dropped), ``"recovered_compacted"`` (the finished rewrite
+    was promoted), or ``"recovered_original"`` (the pre-compaction
+    table was restored)."""
     tmp, old = f"{table}__compact", f"{table}__old"
     if spark.catalog.tableExists(table):
         for t in (tmp, old):

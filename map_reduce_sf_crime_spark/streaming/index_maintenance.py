@@ -4,18 +4,25 @@ fold into a persisted serving artifact.
 The batch halves already exist and are individually pinned — the
 ``lakehouse_cdf`` source turns committed merges into exactly-once
 micro-batches of Delta-CDF-vocabulary change events, and every
-serving artifact has a signed-ledger fold
-(``apply_changes_to_postings_index`` / ``apply_changes_to_dsir_stats``
-/ ``apply_changes_to_term_stats`` / ``apply_changes_to_{ivf,pq}_index``
-/ ``apply_changes_to_signature_catalog``) whose replays collapse by
-generation. This module is the PRODUCTION wiring between them: one
-Structured Streaming query per maintained artifact,
+serving artifact has a fold whose replays collapse by generation
+(``sources/generations.py``). This module is the one wiring between
+them: one Structured Streaming query per maintained artifact,
 
     stream_fold(spark, table_path, key_cols, checkpoint,
                 fold=lambda spark, batch_df, gen: ...)
 
-with ``gen = gen_base + batch_id``. Correctness under the streaming
-contract:
+with ``gen = gen_base + batch_id``. The fold is the artifact's own
+``apply_changes_to_*``, e.g. for the BM25 postings index over a
+documents table and the IVF index over an embeddings table::
+
+    stream_fold(spark, docs_path, ["doc_id"], ckpt,
+                fold=lambda s, df, gen: apply_changes_to_postings_index(
+                    s, df, index_table, gen))
+    stream_fold(spark, emb_path, ["vec_id"], ckpt,
+                fold=lambda s, df, gen: apply_changes_to_ivf_index(
+                    s, index_path, df, gen))
+
+Correctness under the streaming contract:
 
 - ``foreachBatch`` is AT-LEAST-ONCE: a crash replays the failed
   micro-batch with the SAME batch_id, hence the same ``gen`` — and
@@ -45,6 +52,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
 
 def _ensure_source(spark: SparkSession) -> None:
     # registration is idempotent — always re-register rather than
@@ -99,128 +107,3 @@ def stream_fold(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def maintain_postings_index(
-    spark: SparkSession,
-    table_path: str,
-    index_table: str,
-    checkpoint: str,
-    gen_base: int = 1,
-    **kwargs,
-):
-    """The lexical-serving maintenance loop: committed merges of the
-    documents table fold into the persisted BM25 postings index
-    (``retrieval.apply_changes_to_postings_index``) — build the index
-    once from the seed snapshot, run this after (or during) every
-    ingest, and ``bm25_topk_indexed`` serves the live corpus."""
-    from ..operators.retrieval import apply_changes_to_postings_index
-
-    return stream_fold(
-        spark,
-        table_path,
-        ["doc_id"],
-        checkpoint,
-        lambda s, df, gen: apply_changes_to_postings_index(
-            s, df, index_table, gen
-        ),
-        gen_base=gen_base,
-        **kwargs,
-    )
-
-
-def _maintain_ann(apply_changes):
-    """The three ANN maintenance loops differ only in which
-    ``apply_changes_to_*_index`` folds the batch — one factory, same
-    streaming contract as :func:`maintain_postings_index` (gen =
-    gen_base + batch_id; at-least-once foreachBatch × generation-
-    collapsing folds = exactly-once). The embeddings table streams on
-    ``vec_id``; an ``emb_col`` naming drift is the caller's to map
-    (the folds take ``id_col``/``emb_col``, fixed here to the engine's
-    canonical names)."""
-
-    def loop(
-        spark: SparkSession,
-        table_path: str,
-        index_path: str,
-        checkpoint: str,
-        gen_base: int = 1,
-        **kwargs,
-    ):
-        return stream_fold(
-            spark,
-            table_path,
-            ["vec_id"],
-            checkpoint,
-            lambda s, df, gen: apply_changes(s, index_path, df, gen),
-            gen_base=gen_base,
-            **kwargs,
-        )
-
-    return loop
-
-
-def maintain_ivf_index(spark, table_path, index_path, checkpoint, **kwargs):
-    """ANN-serving maintenance loop (round 7, the CF3 symmetry the
-    round-6 verdict asked for): committed merges of the embeddings
-    table fold into the persisted IVF index — deletes/update
-    pre-images tombstone, inserts/post-images append under the
-    stream's generation, ``ivf_topk_indexed`` serves the live corpus.
-    End-to-end (phantom deletes through the stream) pinned in
-    tests/test_streaming_maintenance.py."""
-    from ..operators.similarity import apply_changes_to_ivf_index
-
-    return _maintain_ann(apply_changes_to_ivf_index)(
-        spark, table_path, index_path, checkpoint, **kwargs
-    )
-
-
-def maintain_pq_index(spark, table_path, index_path, checkpoint, **kwargs):
-    """PQ twin of :func:`maintain_ivf_index` (stored codebooks encode
-    each batch; the code table is what folds)."""
-    from ..operators.similarity import apply_changes_to_pq_index
-
-    return _maintain_ann(apply_changes_to_pq_index)(
-        spark, table_path, index_path, checkpoint, **kwargs
-    )
-
-
-def maintain_vector_store(
-    spark, table_path, store_path, checkpoint, gen_base: int = 1, **kwargs
-):
-    """Re-rank store maintenance loop (round 8, ANN10): committed
-    merges of the embeddings table fold into the partitioned
-    raw-vector store (``apply_changes_to_vector_store`` — new/updated
-    vectors append under the stream's generation, deletes append
-    NULL-embedding tombstones), so the PQ-family serves'
-    ``vector_store=`` re-rank stays live alongside the index the
-    other three loops maintain. Same exactly-once composition: the
-    fold's full-row distinct collapses foreachBatch replays."""
-    from ..operators.similarity import apply_changes_to_vector_store
-
-    return stream_fold(
-        spark,
-        table_path,
-        ["vec_id"],
-        checkpoint,
-        lambda s, df, gen: apply_changes_to_vector_store(
-            s, df, store_path, gen
-        ),
-        gen_base=gen_base,
-        **kwargs,
-    )
-
-
-def maintain_ivfpq_index(spark, table_path, index_path, checkpoint, **kwargs):
-    """IVF-PQ hybrid twin of :func:`maintain_ivf_index` — the serving
-    path for embeddings at 100 TB (partition-pruned lists of 16-byte
-    codes) stays live through the same one-liner. Works unchanged on a
-    RESIDUAL-mode index (round 8): every streamed fold's append reads
-    the encoding mode from the index's own ``meta`` artifact, so the
-    loop never needs to be told — pinned end-to-end in
-    tests/test_streaming_maintenance.py's ``ivfpq_res`` leg."""
-    from ..operators.similarity import apply_changes_to_ivfpq_index
-
-    return _maintain_ann(apply_changes_to_ivfpq_index)(
-        spark, table_path, index_path, checkpoint, **kwargs
-    )

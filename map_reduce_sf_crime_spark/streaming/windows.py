@@ -130,13 +130,6 @@ def _sliding_agg(ev: DataFrame) -> DataFrame:
     )
 
 
-def sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour window sliding every 30 minutes (each event lands in 2
-    windows) — the hopping-window variant."""
-    ev = _events_stream(spark, sf_dir)
-    return _window_select(_run_to_memory(_sliding_agg(ev), "complete"))
-
-
 def window_counts_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling + sliding window aggregates as two CONCURRENT
     streaming queries over the same source (one session runs many

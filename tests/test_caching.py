@@ -193,3 +193,53 @@ def test_checkpoint_release_invalidates_registry_memo(spark):
     df2 = q(spark, SF_CHECK)
     assert df2 is not df1, "stale memo frame served after release"
     assert df2.count() == n1 > 0
+
+
+def test_release_frame_fallback_failure_is_counted():
+    """An untracked frame whose unpersist raises is counted into
+    _RELEASE_FAILURES and warned, exactly like a failed checkpoint
+    release — never swallowed silently."""
+    import pytest
+
+    class BrokenFrame:
+        def unpersist(self):
+            raise RuntimeError("session stopped")
+
+    before = caching._RELEASE_FAILURES
+    with pytest.warns(RuntimeWarning, match="releasing an intermediate"):
+        caching._release_frame(BrokenFrame())
+    assert caching._RELEASE_FAILURES == before + 1
+
+
+def test_gateway_key_is_not_reused_after_gateway_gc():
+    """gateway_key() must change when the gateway is replaced, even if
+    the new gateway object lands at the freed one's address (which an
+    id()-based key would alias)."""
+    import gc
+
+    from pyspark import SparkContext
+
+    class Gateway:
+        pass
+
+    real = SparkContext._gateway
+    try:
+        old = Gateway()
+        SparkContext._gateway = old
+        k_old = caching.gateway_key()
+        assert caching.gateway_key() == k_old
+        old_addr = id(old)
+        SparkContext._gateway = None
+        del old
+        gc.collect()
+        # allocate until CPython hands back the freed address (it
+        # usually does at once); the key must differ regardless
+        held = []
+        new = Gateway()
+        while id(new) != old_addr and len(held) < 1000:
+            held.append(new)
+            new = Gateway()
+        SparkContext._gateway = new
+        assert caching.gateway_key() != k_old
+    finally:
+        SparkContext._gateway = real

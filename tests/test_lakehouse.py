@@ -883,6 +883,61 @@ def test_compact_bucketed_preserves_probe_and_recovers(spark):
         spark.sql(f"drop table if exists {t}")
 
 
+
+@pytest.mark.parametrize("compact", ["compact_term_stats", "compact_dsir_stats"])
+def test_ledger_compaction_failure_keeps_ledger(spark, monkeypatch, compact):
+    """A ledger compaction whose rewrite job FAILS must leave the
+    ledger serving its pre-compaction totals: the netted rows go to
+    ``{table}__compact`` and only a finished rewrite is swapped in, so
+    a failure never touches the table being read (an in-place
+    ``saveAsTable`` overwrite drops the table when its job fails), and
+    recovery finds the ledger intact."""
+    from map_reduce_sf_crime_spark.operators import sampling, termstats
+    from map_reduce_sf_crime_spark.sources import lakehouse
+
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "text", "lang"
+    )
+    tbl = f"crash_{compact}"
+    for suffix in ("", "__compact", "__old"):
+        lakehouse.drop_table_and_orphan(spark, f"{tbl}{suffix}")
+    changes = (
+        docs.filter(F.col("doc_id") % 7 == 0)
+        .withColumn("_change_type", F.lit("delete"))
+        .localCheckpoint()
+    )
+    if compact == "compact_term_stats":
+        termstats.write_term_stats(docs, tbl)
+        termstats.apply_changes_to_term_stats(spark, changes, tbl, gen=1)
+        serve = lambda: termstats.token_doc_freq_cataloged(spark, tbl, 50)  # noqa: E731
+        run = termstats.compact_term_stats
+    else:
+        target = F.col("lang") == F.lit("en")
+        sampling.write_dsir_stats(docs, target, tbl, n_buckets=64)
+        sampling.apply_changes_to_dsir_stats(spark, changes, target, tbl, gen=1)
+        serve = lambda: sampling.dsir_scores_cataloged(spark, docs, tbl)  # noqa: E731
+        run = sampling.compact_dsir_stats
+    rows = lambda: sorted(tuple(r) for r in serve().collect())  # noqa: E731
+    want = rows()
+    assert want
+
+    real_write = lakehouse.write_bucketed
+
+    def failing_write(df, *args, **kwargs):
+        boom = F.raise_error(F.lit("injected rewrite failure")).cast("int")
+        real_write(df.withColumn("_boom", boom), *args, **kwargs)
+
+    monkeypatch.setattr(lakehouse, "write_bucketed", failing_write)
+    with pytest.raises(Exception, match="injected rewrite failure"):
+        run(spark, tbl)
+    monkeypatch.undo()
+
+    assert spark.catalog.tableExists(tbl)
+    assert rows() == want
+    assert lakehouse.recover_bucketed_compaction(spark, tbl) == "intact"
+    assert rows() == want
+    lakehouse.drop_table_and_orphan(spark, tbl)
+
 def test_concurrent_writer_lease(spark):
     """Two interleaved writers: while writer A holds the table lease,
     writer B's merge must FAIL LOUDLY (ConcurrentWriterError) before

@@ -652,7 +652,8 @@ def test_cdf_capped_offset_skips_torn_commit_ids(spark, tmp_path):
 def test_streaming_postings_maintenance_serves_live_corpus(spark, tmp_path):
     """The reusable maintenance loop (streaming/index_maintenance):
     build the postings index from the seed snapshot, stream the
-    change feed through maintain_postings_index (availableNow drain),
+    change feed through stream_fold into apply_changes_to_postings_index
+    (availableNow drain),
     and the indexed BM25 must equal live BM25 over the FINAL table —
     inserts searchable, deleted docs gone."""
     from map_reduce_sf_crime_spark.operators import retrieval
@@ -662,7 +663,7 @@ def test_streaming_postings_maintenance_serves_live_corpus(spark, tmp_path):
         write_partitioned,
     )
     from map_reduce_sf_crime_spark.streaming.index_maintenance import (
-        maintain_postings_index,
+        stream_fold,
     )
 
     path = str(tmp_path / "docs_fact")
@@ -707,9 +708,12 @@ def test_streaming_postings_maintenance_serves_live_corpus(spark, tmp_path):
         ).localCheckpoint(),
         key_cols=["doc_id"], partition_cols=["pt"], archive=True,
     )
-    q = maintain_postings_index(
-        spark, path, "stream_postings",
-        checkpoint=str(tmp_path / "ckpt"), starting_cid=0,
+    q = stream_fold(
+        spark, path, ["doc_id"], str(tmp_path / "ckpt"),
+        lambda s, df, gen: retrieval.apply_changes_to_postings_index(
+            s, df, "stream_postings", gen
+        ),
+        starting_cid=0,
     )
     q.awaitTermination(300)
     q.stop()

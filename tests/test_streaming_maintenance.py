@@ -1,5 +1,6 @@
 """Round 7 (VERDICT #5): the packaged ANN maintenance loops —
-``maintain_{ivf,pq,ivfpq}_index`` — exercised end to end, mirroring
+``stream_fold`` over ``apply_changes_to_{ivf,pq,ivfpq}_index`` and
+``apply_changes_to_vector_store`` — exercised end to end, mirroring
 test_streaming_postings_maintenance_serves_live_corpus: a lakehouse
 embeddings table is poisoned with cosine-1.0 PHANTOM copies of every
 query vector, the serving indexes are built from that snapshot, then
@@ -21,12 +22,7 @@ from map_reduce_sf_crime_spark.sources.lakehouse import (
     write_partitioned,
 )
 from map_reduce_sf_crime_spark.sources.parquet import load_table
-from map_reduce_sf_crime_spark.streaming.index_maintenance import (
-    maintain_ivf_index,
-    maintain_ivfpq_index,
-    maintain_pq_index,
-    maintain_vector_store,
-)
+from map_reduce_sf_crime_spark.streaming.index_maintenance import stream_fold
 
 from .conftest import SF_CHECK
 
@@ -94,22 +90,26 @@ def test_ann_maintenance_loops_serve_live_corpus(spark, tmp_path):
     )
 
     loops = {
-        "ivf": maintain_ivf_index,
-        "pq": maintain_pq_index,
-        "ivfpq": maintain_ivfpq_index,
-        "ivfpq_res": maintain_ivfpq_index,
+        "ivf": similarity.apply_changes_to_ivf_index,
+        "pq": similarity.apply_changes_to_pq_index,
+        "ivfpq": similarity.apply_changes_to_ivfpq_index,
+        "ivfpq_res": similarity.apply_changes_to_ivfpq_index,
     }
-    for name, loop in loops.items():
-        q = loop(
-            spark, path, idx[name],
-            checkpoint=str(tmp_path / f"ckpt_{name}"), starting_cid=0,
+    for name, fold in loops.items():
+        q = stream_fold(
+            spark, path, ["vec_id"], str(tmp_path / f"ckpt_{name}"),
+            lambda s, df, gen, fold=fold, p=idx[name]: fold(s, p, df, gen),
+            starting_cid=0,
         )
         q.awaitTermination(300)
         q.stop()
     # the re-rank store rides the same stream
-    q = maintain_vector_store(
-        spark, path, store_path,
-        checkpoint=str(tmp_path / "ckpt_store"), starting_cid=0,
+    q = stream_fold(
+        spark, path, ["vec_id"], str(tmp_path / "ckpt_store"),
+        lambda s, df, gen: similarity.apply_changes_to_vector_store(
+            s, df, store_path, gen
+        ),
+        starting_cid=0,
     )
     q.awaitTermination(300)
     q.stop()

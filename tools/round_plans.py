@@ -1,8 +1,9 @@
 """Capture `.explain("formatted")` for every bench query into
-plans/r11/<query>_<tag>.txt — the optimization round's before/after
-plan evidence (judge-checkable without running Spark).
+plans/<round>/<query>_<tag>.txt — an optimization round's before/after
+plan evidence (checkable without running Spark).
 
-Usage: python tools/r11_plans.py before|after [query ...]
+Usage: python tools/round_plans.py <round> before|after [query ...]
+e.g.   python tools/round_plans.py r12 after weekly_report
 
 Runs with SPARK_GRAFT_NO_CHECKPOINT=1 (the documented plan-audit knob:
 a checkpointed query otherwise explains as one LogicalRDD scan) so the
@@ -27,16 +28,19 @@ from map_reduce_sf_crime_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or BENCH_QUERIES
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_tag = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or BENCH_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r11",
+        round_tag,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r11_plans")
+    spark = get_spark(f"{round_tag}_plans")
     for name in names:
         df = REGISTRY[name].spark(spark, sf_dir)
         buf = io.StringIO()
