@@ -182,11 +182,14 @@ def window_counts_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     us = F.unix_micros(F.col("ts"))
     h1 = 3_600_000_000  # 1 hour in microseconds
     m30 = 1_800_000_000  # 30 minutes
-    s30 = us - us % m30
+    # pmod, not %: Spark's % takes the dividend's sign, so a pre-epoch
+    # ts would round UP to the next mark instead of flooring like
+    # F.window does
+    s30 = us - F.pmod(us, F.lit(m30))
     wins = F.array(
         F.struct(
             F.lit("tumbling").alias("kind"),
-            F.timestamp_micros(us - us % h1).alias("ws"),
+            F.timestamp_micros(us - F.pmod(us, F.lit(h1))).alias("ws"),
         ),
         F.struct(
             F.lit("sliding").alias("kind"),

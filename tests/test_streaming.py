@@ -30,17 +30,37 @@ def test_tumbling_equals_batch_window(spark):
     assert s == b
 
 
-def test_fused_window_counts_equals_concurrent(spark):
+def test_fused_window_counts_equals_concurrent(spark, tmp_path):
     """The r12 fused single-stream form of stream_window_counts must
     emit exactly the rows of the two-query concurrent form: manual
     window-instance assignment (epoch-floor arithmetic) is pinned to
     F.window's expansion for both the tumbling and the 1h/30min
-    sliding family."""
-    fused = windows.window_counts_fused(spark, SF_SMOKE)
-    conc = windows.window_counts_concurrent(spark, SF_SMOKE)
-    f = {tuple(r) for r in fused.collect()}
-    c = {tuple(r) for r in conc.collect()}
-    assert f == c
+    sliding family. The second input moves every fourth event to
+    1969-12-31, where a truncating ``%`` rounds window starts UP
+    instead of flooring them."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    shift = pa.scalar(
+        datetime.datetime(2024, 1, 1) - datetime.datetime(1969, 12, 31),
+        type=pa.duration("us"),
+    )
+    early = pc.equal(pc.bit_wise_and(t["event_id"], 3), 0)
+    ts = pc.if_else(early, pc.subtract(t["ts"], shift), t["ts"])
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts)
+    assert pc.any(pc.less(ts, pa.scalar(0, type=ts.type))).as_py()
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+
+    for sf_dir in (SF_SMOKE, str(tmp_path)):
+        fused = windows.window_counts_fused(spark, sf_dir)
+        conc = windows.window_counts_concurrent(spark, sf_dir)
+        f = {tuple(r) for r in fused.collect()}
+        c = {tuple(r) for r in conc.collect()}
+        assert f == c, sf_dir
 
 
 def test_session_count_conservation(spark):

@@ -696,18 +696,11 @@ def quantizer_probe(spark, n: int) -> None:
             skew = max(sizes.values()) / (tot / similarity.IVF_K)
             cids, cmat = cq
             qmat = np.array([v for _, v in queries])
-            qcos = similarity._seq_cosines(qmat, cmat)
+            picks = similarity._nearest_lists(
+                qmat, cids, cmat, similarity.IVF_NPROBE
+            )
             fracs = [
-                sum(
-                    sizes.get(int(c), 0)
-                    for c in np.asarray(cids)[
-                        np.argsort(-qcos[qi], kind="stable")[
-                            : similarity.IVF_NPROBE
-                        ]
-                    ]
-                )
-                / tot
-                for qi in range(len(queries))
+                sum(sizes.get(int(c), 0) for c in row) / tot for row in picks
             ]
             print(
                 f"quantizer {fname}[{n_total}] {tag}: recall@3={rec:.3f} "
@@ -1247,7 +1240,6 @@ def headsample_probe(spark, n: int) -> None:
         skew = max(sizes.values()) / (tot / similarity.IVF_K)
         cids, cmat = cq
         qmat = np.array([v for _, v in queries])
-        qcos = similarity._seq_cosines(qmat, cmat)
         for nprobe in (1, 2):
             got = {
                 (r.query_id, r.vec_id)
@@ -1262,14 +1254,8 @@ def headsample_probe(spark, n: int) -> None:
                 / len(late_exact)
             )
             fracs = [
-                sum(
-                    sizes.get(int(c), 0)
-                    for c in np.asarray(cids)[
-                        np.argsort(-qcos[qi], kind="stable")[:nprobe]
-                    ]
-                )
-                / tot
-                for qi in range(len(queries))
+                sum(sizes.get(int(c), 0) for c in row) / tot
+                for row in similarity._nearest_lists(qmat, cids, cmat, nprobe)
             ]
             print(
                 f"headsample[{n_total} vecs, train_rows={train_rows}, "
@@ -1422,15 +1408,12 @@ def crossover_probe(spark, n: int, n_cent: int = 512) -> None:
 
             cids, cmat = similarity._stored_centroids(spark, path)
             qmat = np.array([v for _, v in queries])
-            qcos = similarity._seq_cosines(qmat, cmat)
-            probed = set()
-            for qi in range(len(queries)):
-                probed |= {
-                    int(c)
-                    for c in cids[
-                        np.argsort(-qcos[qi], kind="stable")[:nprobe]
-                    ]
-                }
+            probed = {
+                int(c)
+                for c in similarity._nearest_lists(
+                    qmat, cids, cmat, nprobe
+                ).ravel()
+            }
             touched = sum(sizes.get(c, 0) for c in probed)
             extra = (
                 f", touched {touched}/{rows_n} rows "
