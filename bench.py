@@ -99,14 +99,20 @@ def run_query(spark, name: str, sf_dir: str) -> float:
 
 
 def rep_times(
-    spark, name: str, sf_dir: str, fresh_build: bool = False
+    spark,
+    name: str,
+    sf_dir: str,
+    fresh_build: bool = False,
+    jobs: list[int] | None = None,
 ) -> list[float]:
     """REPS runs, sorted ascending. ``fresh_build=True`` clears the
     registry's built-frame memo before every rep, so each rep pays
     plan construction + Catalyst analysis again (the rounds ≤5
     estimator); default keeps the memo (steady-state re-execution).
     Spark's canonicalized-plan cache lookup means intra-query caches
-    behave as in a warm service under both."""
+    behave as in a warm service under both. A ``jobs`` list receives
+    each rep's Spark job count (the rep runs under its own job
+    group)."""
     from map_reduce_sf_crime_spark.functions.caching import (
         release_plan_checkpoints,
     )
@@ -124,7 +130,17 @@ def rep_times(
             # the deliberate warm-rep house practice since r3).
             release_plan_checkpoints()
             _registry._BUILT.clear()
-        out.append(run_query(spark, name, sf_dir))
+        if jobs is None:
+            out.append(run_query(spark, name, sf_dir))
+            continue
+        sc = spark.sparkContext
+        group = f"rep_times_{name}_{time.perf_counter_ns()}"
+        sc.setJobGroup(group, group, False)
+        try:
+            out.append(run_query(spark, name, sf_dir))
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     return sorted(out)
 
 

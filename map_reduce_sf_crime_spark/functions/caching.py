@@ -201,6 +201,57 @@ def plan_checkpoint(
     return out
 
 
+def plan_checkpoint_single(
+    df: DataFrame, release_after: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """:func:`plan_checkpoint` of a BOUNDED frame as ONE partition,
+    planned non-adaptively so the checkpoint's ``LogicalRDD`` reports
+    ``SinglePartition``: every later aggregate or window over it
+    plans no Exchange, so a fan-out of N legs runs as one job instead
+    of one adaptive query stage (and one re-optimization) per leg.
+
+    Under AQE the checkpointed plan is an ``AdaptiveSparkPlanExec``
+    whose output partitioning the ``LogicalRDD`` records as
+    ``UnknownPartitioning(0)`` — even after ``coalesce(1)`` or
+    ``repartition(1)`` — so the one-partition fact would be lost. The
+    session's ``spark.sql.adaptive.enabled`` is therefore switched off
+    for the checkpoint only and restored in ``finally``: the frame's
+    own plan runs without AQE's runtime re-planning (join conversion,
+    partition coalescing), which suits a frame whose size is known
+    ahead, and queries over the result plan adaptively again. (The
+    switch is session-wide for its duration: a query started
+    concurrently on the same session in that window would plan
+    non-adaptively, values unchanged.)
+
+    ``repartition(1)``, not ``coalesce(1)``: the frame's producing
+    stage keeps its parallelism and only its (bounded) output moves to
+    one partition. Only for frames whose size is bounded by
+    construction — one task holds the whole frame. Tracking,
+    ``release_after``, reliable mode and the
+    ``SPARK_GRAFT_NO_CHECKPOINT=1`` audit mode are plan_checkpoint's."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.adaptive.enabled"
+    prev = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return plan_checkpoint(df.repartition(1), release_after=release_after)
+    finally:
+        conf.set(key, prev)
+
+
+def is_single_partition(df: DataFrame) -> bool:
+    """True when ``df`` is one partition by construction — a
+    checkpoint whose ``LogicalRDD`` reports ``SinglePartition`` (what
+    :func:`plan_checkpoint_single` returns) or a ``repartition(1)`` /
+    ``coalesce(1)`` root (what it returns in the audit mode) — so
+    aggregates and windows over it need no Exchange."""
+    plan = df._jdf.queryExecution().analyzed()
+    name = plan.nodeName()
+    if name == "LogicalRDD":
+        return plan.outputPartitioning().toString() == "SinglePartition"
+    return name == "Repartition" and plan.numPartitions() == 1
+
+
 def _release_frame(df: DataFrame) -> None:
     """Release ONE frame a checkpoint consumer no longer needs: a
     tracked checkpoint is freed through its LogicalRDD (and dropped

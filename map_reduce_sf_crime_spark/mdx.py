@@ -82,6 +82,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.caching import is_single_partition, plan_cache
+
 #: cube binding (sfcrime.xml): hierarchy → (level → star-join column),
 #: plus the Mondrian all-member caption where the hierarchy hasAll.
 _DIMS = {
@@ -127,7 +129,11 @@ TIME_DEFAULT_MEMBER: tuple[int, ...] = (2013, 1, 1)
 #: runs later) shows 3-vs-4 within noise with a slight edge to 4
 #: (mins 3.15/3.34/3.40 vs 3.19/3.82/3.83 s at sf0.1), so the
 #: threshold stays at 4: below it the leaf's extra shuffle buys
-#: nothing the cached star doesn't already give.
+#: nothing the cached star doesn't already give. A star that is ONE
+#: partition (functions/caching.is_single_partition — olap_rollups'
+#: checkpointed star) never takes the leaf: its pairs already
+#: aggregate without an Exchange, and the leaf's cache would lose
+#: that partitioning and bring one Exchange back per pair.
 MDX_LEAF_MIN_PAIRS = 4
 
 
@@ -1974,10 +1980,11 @@ def mdx_cells_many(
       once-computed leaf pre-aggregate (every level column, Mondrian's
       cell-cache idea) instead of rescanning the fact — sum is
       reassociative and member filters only reference level columns,
-      so the results are identical; below the threshold the (cached)
-      star is aggregated directly, since the leaf's extra shuffle
-      costs more than it saves (measured +0.7 s per olap_rollups rep
-      at sf0.1 when applied unconditionally)."""
+      so the results are identical; below the threshold, or when the
+      star is one partition, the star is aggregated directly, since
+      the leaf's extra shuffle costs more than it saves (measured
+      +0.7 s per olap_rollups rep at sf0.1 when applied
+      unconditionally)."""
     compiled = []  # (tag, query, implicit_filters)
     for tag, query in tagged:
         implicit: list[tuple[str, object]] = []
@@ -2019,17 +2026,13 @@ def mdx_cells_many(
         _pair_measure(q, c, r) in q.calc for _, q, c, r, _ in all_pairs
     )
     base = star
-    if n_enum_pairs >= MDX_LEAF_MIN_PAIRS:
+    if n_enum_pairs >= MDX_LEAF_MIN_PAIRS and not is_single_partition(star):
         level_cols = [
             col for dim in _DIMS.values() for (_, col) in dim["levels"]
         ]
-        base = star.groupBy(*level_cols).agg(F.sum("crimes").alias("crimes"))
-        try:
-            from .functions.caching import plan_cache
-
-            base = plan_cache(base)
-        except ImportError:  # pragma: no cover - standalone use
-            pass
+        base = plan_cache(
+            star.groupBy(*level_cols).agg(F.sum("crimes").alias("crimes"))
+        )
 
     out = None
     scalar_conds: list = []  # conditional-agg conditions, one per _c{i}

@@ -67,21 +67,25 @@ def category_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _joined_orders(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Quarter orders ⋈ customer ⋈ nation with join type ``how``: the
+    shuffle join on the customer key and the broadcast nation join."""
+    orders = _quarter(load_table(spark, sf_dir, "orders"))
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return orders.join(customer, orders.o_custkey == customer.c_custkey, how).join(
+        F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, how
+    )
+
+
 def incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(category, district, d) — adds district via orders ⋈ customer
     (shuffle hash/sort-merge on the key Catalyst picks; AQE may convert)
     and customer ⋈ nation (explicit broadcast: 25-row dim — J1's
     legitimate form, SanFranciscoCrimePrepOlap.java:69-74 did this with
     driver statics)."""
-    orders = _quarter(load_table(spark, sf_dir, "orders"))
-    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .select(
-            F.col("o_orderpriority").alias("category"),
-            F.col("n_name").alias("district"),
-            F.to_date("o_orderdate").alias("d"),
-        )
+    return _joined_orders(spark, sf_dir, "inner").select(
+        F.col("o_orderpriority").alias("category"),
+        F.col("n_name").alias("district"),
+        F.to_date("o_orderdate").alias("d"),
     )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.star import star_tables, star_tables_sql
-from ..functions.caching import plan_cache
+from ..functions.caching import plan_cache, plan_checkpoint_single
 from .crimes_view import INCIDENTS_SQL, incidents
 from .registry import register
 
@@ -381,17 +381,21 @@ def olap_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint from the cache).
     # Values identical (plan_checkpoint contract); the no-checkpoint
     # plan-audit knob still exposes the full build plan.
-    # r12 single-copy policy (guide §5, the r11 judge's double-
-    # materialization flag): the star CACHE is released the moment
-    # the checkpoint materializes — holding both kept two full copies
-    # of the fact-scale star in executor storage purely so warm
-    # rebuild reps could re-checkpoint from cache. A rebuild now
-    # re-executes the star from parquet (the honest fresh-build
-    # cost); the serve path reads the final checkpoint either way.
-    from ..functions.caching import plan_checkpoint
-
+    # ONE partition: the star is bounded by construction — |days in
+    # Q1-1995| × |o_orderpriority| × |nations| ≤ 90 × 5 × 25 = 11,250
+    # rows at every scale factor (538 at sf0.01) — so
+    # plan_checkpoint_single holds it in one partition whose
+    # SinglePartition every leg's aggregate and window satisfies: the
+    # fan-out plans no Exchange and runs as one job, where a
+    # multi-partition checkpoint gave each leg its own adaptive query
+    # stage (88 → 26 jobs per fresh build + collect). The incidents
+    # scan and the orders ⋈ customer join upstream stay parallel.
+    # r12 single-copy policy: the star CACHE is released the moment
+    # the checkpoint materializes; a rebuild re-executes the star from
+    # parquet (the honest fresh-build cost), and the serve path reads
+    # the final checkpoint either way.
     star = _star_join(spark, sf_dir)
-    sj = plan_checkpoint(star, release_after=(star,))
+    sj = plan_checkpoint_single(star, release_after=(star,))
     # mdx_category + mdx_district member totals + the full time
     # rollup are ONE grouping-sets aggregate: a single Expand + one
     # hash aggregate over the cached star join, instead of three
@@ -496,14 +500,11 @@ def olap_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the built 357-row frame measured 2.7 s; execution is
     # milliseconds). The tracked localCheckpoint swaps the lineage
     # for a LogicalRDD scan; values bit-identical, gate unchanged.
-    from ..functions.caching import plan_checkpoint
-
-    # r12: the star checkpoint fed every leg above; once the final
-    # artifact materializes here, it is the THIRD copy of star-scale
-    # data still held — release it with the same single-copy policy
-    # (nothing downstream references it: the returned frame is a
-    # LogicalRDD over its own blocks).
-    return plan_checkpoint(
+    # One partition: the artifact is a few hundred rows, bounded by
+    # the star's members. The star checkpoint is released once the
+    # artifact materializes (single-copy policy): nothing downstream
+    # references it.
+    return plan_checkpoint_single(
         tagged.unionByName(geo).unionByName(cells).unionByName(nav_cells),
         release_after=(sj,),
     )

@@ -16,6 +16,7 @@ from ..operators.weekly import weekly_summary_sql
 from .crimes_view import (
     CATEGORY_INCIDENTS_SQL,
     INCIDENTS_SQL,
+    _joined_orders,
     category_incidents,
     incidents,
 )
@@ -43,32 +44,33 @@ def weekly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness gate).
 
     r12 single-pass form (guide §2.3 "aggregate before you shuffle" +
-    §2.4 shared exchange): the union of the two branches previously
-    scanned orders TWICE (bare for the category report, joined for the
-    district report) and paid two partial-agg exchange pairs. Both
-    reports are counts over the SAME incident rows — the orders ⋈
-    customer join is FK-1:1 (every order has exactly one customer),
-    so category counts off the joined frame equal the bare-scan counts
-    row for row; the driver's oracle (unchanged: category branch from
-    bare orders) re-proves that equality on every gate run. One scan,
-    each incident exploded into its two (dim, member) rows, ONE
-    pivot-count pass."""
+    §2.4 shared exchange): one scan of orders, each incident exploded
+    into its (dim, member) rows, ONE pivot-count pass — instead of a
+    bare scan for the category report plus a joined scan for the
+    district report, with two partial-agg exchange pairs.
+
+    The scan is LEFT-joined to customer and nation, so an order whose
+    ``o_custkey`` or ``c_nationkey`` has no match still counts in its
+    category row (the category report is over bare orders, as in the
+    oracle); its district row is emitted only when the nation side
+    matched, decided by the non-null join key — not by ``n_name``,
+    which a matched nation may legitimately hold as NULL. The inner
+    :func:`incidents` frame would silently drop orphan-key orders
+    from the category counts."""
     buckets = list(range(N_WEEK_BUCKETS))
-    inc = incidents(spark, sf_dir)
-    exploded = inc.select(
+    category = F.struct(
+        F.lit("category").alias("dim"), F.col("o_orderpriority").alias("member")
+    )
+    district = F.struct(
+        F.lit("district").alias("dim"), F.col("n_name").alias("member")
+    )
+    exploded = _joined_orders(spark, sf_dir, "left").select(
         F.explode(
-            F.array(
-                F.struct(
-                    F.lit("category").alias("dim"),
-                    F.col("category").alias("member"),
-                ),
-                F.struct(
-                    F.lit("district").alias("dim"),
-                    F.col("district").alias("member"),
-                ),
-            )
+            F.when(
+                F.col("n_nationkey").isNotNull(), F.array(category, district)
+            ).otherwise(F.array(category))
         ).alias("_dm"),
-        week_bucket_col(F.col("d")).alias("bucket"),
+        week_bucket_col(F.to_date("o_orderdate")).alias("bucket"),
     ).select("_dm.dim", "_dm.member", "bucket")
     out = (
         exploded.groupBy("dim", "member")

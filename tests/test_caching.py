@@ -107,6 +107,75 @@ def test_plan_checkpoint_release_after_noop_in_audit_mode(spark, monkeypatch):
     base.unpersist()
 
 
+def _bounded_frame(spark):
+    return spark.range(0, 600, 1, 4).selectExpr("id", "id % 5 as g", "id * 2 as v")
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_plan_checkpoint_single_reports_single_partition(spark):
+    """plan_checkpoint_single's LogicalRDD reports SinglePartition, so
+    an aggregate over it plans no Exchange under AQE, and its values
+    equal plan_checkpoint's."""
+    caching.release_plan_caches()
+    df = _bounded_frame(spark)
+    one = caching.plan_checkpoint_single(df)
+    plain = caching.plan_checkpoint(df)
+    analyzed = one._jdf.queryExecution().analyzed()
+    assert analyzed.nodeName() == "LogicalRDD"
+    assert analyzed.outputPartitioning().toString() == "SinglePartition"
+    assert caching.is_single_partition(one)
+    assert not caching.is_single_partition(plain)
+    assert one in caching._TRACKED_CHECKPOINTS
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    agg = one.groupBy("g").agg({"v": "sum"})
+    assert "Exchange" not in agg._jdf.queryExecution().executedPlan().toString()
+    assert _rows(one) == _rows(plain)
+    assert _rows(agg) == _rows(plain.groupBy("g").agg({"v": "sum"}))
+    caching.release_plan_caches()
+
+
+def test_plan_checkpoint_single_restores_aqe_when_checkpoint_raises(
+    spark, monkeypatch
+):
+    """The non-adaptive window is scoped: the session's AQE setting is
+    restored after the checkpoint, also when the checkpoint raises."""
+    import pytest
+
+    key = "spark.sql.adaptive.enabled"
+    seen = []
+
+    def boom(df, **kw):
+        seen.append(spark.conf.get(key))
+        raise RuntimeError("checkpoint failed")
+
+    for prev in ("false", "true"):
+        spark.conf.set(key, prev)
+        with monkeypatch.context() as m:
+            m.setattr(caching, "plan_checkpoint", boom)
+            with pytest.raises(RuntimeError, match="checkpoint failed"):
+                caching.plan_checkpoint_single(_bounded_frame(spark))
+        assert spark.conf.get(key) == prev
+    assert seen == ["false", "false"]
+
+
+def test_plan_checkpoint_single_audit_mode_values(spark, monkeypatch):
+    """SPARK_GRAFT_NO_CHECKPOINT=1 takes no checkpoint and tracks
+    nothing; the returned frame (a one-partition repartition) keeps
+    the values."""
+    caching.release_plan_caches()
+    df = _bounded_frame(spark)
+    want = _rows(df)
+    monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
+    out = caching.plan_checkpoint_single(df)
+    assert not caching._TRACKED_CHECKPOINTS
+    assert caching.is_single_partition(out)
+    assert not caching.is_single_partition(df)
+    assert _rows(out) == want
+
+
 def test_plan_checkpoint_reliable_mode(spark, tmp_path):
     """reliable=True routes through Dataset.checkpoint() into the
     session's checkpoint directory (durable storage on a real

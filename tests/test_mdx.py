@@ -352,6 +352,75 @@ def test_leaf_preaggregation_path_matches_direct(spark):
     assert got == want
 
 
+def test_one_partition_base_skips_leaf_preaggregate(spark):
+    """Over a one-partition checkpoint (plan_checkpoint_single — the
+    olap_rollups star), a batch with >= MDX_LEAF_MIN_PAIRS enumerating
+    pairs aggregates the base directly: its plan has no Exchange (the
+    base's SinglePartition satisfies every groupBy) and no
+    InMemoryRelation (a leaf cache would lose that partitioning and
+    bring one Exchange back per pair). Values equal the multi-partition
+    mdx_query path, which keeps the leaf pre-aggregate."""
+    from map_reduce_sf_crime_spark.functions.caching import (
+        plan_checkpoint_single,
+        release_plan_caches,
+    )
+    from map_reduce_sf_crime_spark.mdx import MDX_LEAF_MIN_PAIRS, mdx_cells_many
+    from map_reduce_sf_crime_spark.plans.olap_queries import _star_join
+
+    year = _fixture_year(spark)
+    q = f"""select {{([Measures].[crimes], [Time].[{year}].Children)}} ON COLUMNS,
+      {{[District].[All Districts], [Category].[All Categories],
+        [Category].Children, [District].Children}} ON ROWS
+    from [sfcrime]"""
+    parsed = parse_mdx(q)
+    n_enum = sum(
+        1
+        for ct in parsed.columns
+        for rt in parsed.rows
+        if any(m.enum_col for m in ct + rt)
+    )
+    assert n_enum >= MDX_LEAF_MIN_PAIRS  # the leaf path would engage
+    star = plan_checkpoint_single(_star_join(spark, SF_SMOKE))
+    cells = mdx_cells_many(star, [("q", parsed)])
+    plan = cells._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    got = sorted(
+        (r.row_member, r.col_member, r.crimes)
+        for r in cells.select("row_member", "col_member", "crimes").collect()
+    )
+    want = sorted(
+        (r.row_member, r.col_member, r.crimes)
+        for r in mdx_query(spark, SF_SMOKE, q).collect()
+    )
+    assert got == want and got
+    release_plan_caches()
+
+
+def test_olap_rollups_fresh_build_job_budget(spark):
+    """A fresh olap_rollups build plus collect runs a bounded number of
+    Spark jobs: the fan-out over the one-partition star is one job, not
+    one adaptive query stage per aggregate leg (43 jobs measured at
+    sf0.001 against 105 with the star checkpointed multi-partition).
+    Every plan cache and checkpoint is released first, so the count
+    does not depend on what ran earlier in the session."""
+    from map_reduce_sf_crime_spark.functions.caching import release_plan_caches
+    from map_reduce_sf_crime_spark.plans.registry import REGISTRY
+
+    sc = spark.sparkContext
+    group = "olap_rollups_job_budget"
+    release_plan_caches()
+    sc.setJobGroup(group, group, False)
+    try:
+        rows = REGISTRY["olap_rollups"].spark(spark, SF_SMOKE).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    release_plan_caches()
+    assert rows
+    assert jobs <= 55, jobs
+
+
 # --------------------------------------------------------------- round 6:
 # the JPivot sort/filter grammar (Order / TopCount / Filter on ROWS)
 

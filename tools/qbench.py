@@ -1,7 +1,9 @@
 """Single-query A/B timer for the optimization rounds: bench.py's
 exact methodology (registry build + noop sink, min/median of REPS,
 steal sampled) restricted to the named queries, so a change can be
-measured back-to-back without paying the full suite.
+measured back-to-back without paying the full suite. ``build_jobs`` is
+the median Spark job count of one fresh build plus noop, so a
+build-path change shows the layer it moved without a perfbench run.
 
     python tools/qbench.py query [query ...]
 
@@ -30,12 +32,14 @@ def main() -> None:
     for name in names:
         spark.catalog.clearCache()
         runs = rep_times(spark, name, sf_dir)
-        runs_b = rep_times(spark, name, sf_dir, fresh_build=True)
+        jobs: list[int] = []
+        runs_b = rep_times(spark, name, sf_dir, fresh_build=True, jobs=jobs)
         out[name] = {
             "min": round(runs[0], 3),
             "median": round(runs[len(runs) // 2], 3),
             "build_min": round(runs_b[0], 3),
             "build_median": round(runs_b[len(runs_b) // 2], 3),
+            "build_jobs": sorted(jobs)[len(jobs) // 2],
         }
     st1, tot1 = steal_ticks()
     steal = round(100.0 * (st1 - st0) / max(1, tot1 - tot0), 2)
