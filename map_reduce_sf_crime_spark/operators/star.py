@@ -11,8 +11,15 @@ answers MDX over it (sfcrime.xml:4-28) via star joins (J4) and
 Spark-first rewrite: each table is a DataFrame built declaratively;
 fact FKs come from **name-equality broadcast joins** against the dims
 (not positional +1 arithmetic — SURVEY §2.3 J5 off-by-one drift is
-resolved by construction). The OLAP surface is ``rollup``/``cube``
-over the star join, which Catalyst expands to one Expand + hash-agg.
+resolved by construction). :func:`star_tables` builds the normalized
+star for the J4 surface (``star_fact``, the dims, the star join).
+
+Every dim is the distinct values of the daily aggregate the fact is
+built from, so joining the dims back onto the fact is an identity
+join: it drops only rows with a NULL key and adds the calendar levels
+of ``d``. :func:`star_rows` therefore reads the denormalized star
+straight off the daily aggregate, with no join; the OLAP surface
+(``rollup``/grouping sets and the MDX cells) aggregates that.
 
 Timeperiod keeps the fuller MySQL shape incl. ``week``
 (starschema.sql:1-7; the Postgres DDL drops it — SURVEY §1.5 drift
@@ -23,12 +30,23 @@ resolved toward MySQL) with **0-based month** exactly as
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.calendar import month0_col, month0_sql, week_of_month_col, week_of_month_sql
 from ..functions.caching import plan_cache
 from .dims import dictionary_encode, dictionary_encode_sql
+
+
+def _calendar(d: Column) -> list[Column]:
+    """The timeperiod levels of date ``d``: ``year``, 0-based
+    ``month``, ``week`` of month and ``day`` of month."""
+    return [
+        F.year(d).alias("year"),
+        month0_col(d).alias("month"),
+        week_of_month_col(d).alias("week"),
+        F.dayofmonth(d).alias("day"),
+    ]
 
 
 def timeperiod(dates: DataFrame, date_col: str = "d") -> DataFrame:
@@ -41,10 +59,7 @@ def timeperiod(dates: DataFrame, date_col: str = "d") -> DataFrame:
         .select(
             F.row_number().over(Window.orderBy("d")).alias("time_id"),
             F.col("d"),
-            F.year("d").alias("year"),
-            month0_col(F.col("d")).alias("month"),
-            week_of_month_col(F.col("d")).alias("week"),
-            F.dayofmonth("d").alias("day"),
+            *_calendar(F.col("d")),
         )
     )
 
@@ -56,6 +71,14 @@ def timeperiod_sql(table_expr: str, date_col: str = "d") -> str:
            {week_of_month_sql("d")} as week, dayofmonth(d) as day
     from (select distinct {date_col} as d from {table_expr} t)
     """
+
+
+def _daily(inc: DataFrame) -> DataFrame:
+    """``daily(d, category, district, crimes)`` — the daily
+    cat×district triplet count (A2) every star table derives from."""
+    return inc.groupBy("d", "category", "district").agg(
+        F.count(F.lit(1)).alias("crimes")
+    )
 
 
 def star_tables(inc: DataFrame) -> dict[str, DataFrame]:
@@ -74,11 +97,7 @@ def star_tables(inc: DataFrame) -> dict[str, DataFrame]:
     instead of four independent re-scans of the fact-sized input. At
     100 TB this is the difference between one pass and four.
     """
-    daily = (
-        inc.groupBy("d", "category", "district")
-        .agg(F.count(F.lit(1)).alias("crimes"))
-        .transform(plan_cache)
-    )
+    daily = _daily(inc).transform(plan_cache)
     category = dictionary_encode(daily, "category", "category_id")
     district = dictionary_encode(daily, "district", "district_id")
     tp = timeperiod(daily, "d")
@@ -90,6 +109,22 @@ def star_tables(inc: DataFrame) -> dict[str, DataFrame]:
         .transform(plan_cache)  # shared by every OLAP query over the star (J4/A5)
     )
     return {"category": category, "district": district, "timeperiod": tp, "fact": fact}
+
+
+def star_rows(inc: DataFrame) -> DataFrame:
+    """The denormalized star ``(crimes, category, district, d, year,
+    month, week, day)`` — the rows of :func:`star_tables`' fact joined
+    to its three dims, read straight off the daily aggregate.
+
+    The dims are the distinct values of that same aggregate, so every
+    daily row with non-NULL keys matches exactly one row of each dim
+    and the name-equality joins drop only the NULL-key rows; those are
+    filtered here, and the calendar levels come from ``d`` itself."""
+    return _daily(inc).filter(
+        F.col("category").isNotNull()
+        & F.col("district").isNotNull()
+        & F.col("d").isNotNull()
+    ).select("crimes", "category", "district", "d", *_calendar(F.col("d")))
 
 
 def star_tables_sql(incidents_sql: str) -> dict[str, str]:

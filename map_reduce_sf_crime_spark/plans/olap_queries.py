@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.star import star_tables, star_tables_sql
+from ..operators.star import star_rows, star_tables, star_tables_sql
 from ..functions.caching import plan_cache, plan_checkpoint_single
 from .crimes_view import INCIDENTS_SQL, incidents
 from .registry import register
@@ -99,9 +99,10 @@ def star_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: fact ⋈ category ⋈ district ⋈ timeperiod on FK=PK — all three
     dims broadcast (Mondrian's query-time star join, sfcrime.xml:5-26).
-    Cached: all four MDX-surface queries aggregate this same
+    Cached: every ``mdx_query`` over one sf dir aggregates this same
     denormalized frame (canonicalized-plan cache lookup shares one
-    materialization across them)."""
+    materialization across them). ``olap_rollups`` reads the same
+    rows without the joins, through :func:`star_rows`."""
     t = star_tables(incidents(spark, sf_dir))
     return (
         t["fact"]
@@ -369,18 +370,26 @@ def olap_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotals and grand total; 'time' = year→month→week
     (sfcrime.xml:18-26 TimeDimension levels; week per MySQL DDL
     starschema.sql:5). Catalyst expands each rollup to a single
-    Expand + one hash aggregate over the shared cached star join —
-    no N² of separate group-bys at scale."""
-    # r11: checkpoint the (cached) star before fanning out into the
-    # ~15 aggregation legs below. plan_cache cuts re-EXECUTION but
-    # every leg still embeds the star's full logical subtree, so the
-    # per-build Catalyst walk over the final union planned ~15 copies
-    # of it — measured 5.9 s (cells leg) + 2.4 s (nav leg) per action
-    # at sf0.1 with the cache WARM, collapsing to 2.1 s + 1.2 s over
-    # the checkpoint's LogicalRDD (+0.5 s to materialize the
-    # checkpoint from the cache).
-    # Values identical (plan_checkpoint contract); the no-checkpoint
-    # plan-audit knob still exposes the full build plan.
+    Expand + one hash aggregate over the checkpointed star rows —
+    no N² of separate group-bys at scale.
+
+    The star is :func:`star_rows`, read straight off the daily
+    aggregate; the DuckDB twin keeps Mondrian's star join, so the
+    gate checks that the two agree."""
+    # r11: checkpoint the star before fanning out into the ~15
+    # aggregation legs below. Every leg embeds the star's full logical
+    # subtree, so the per-build Catalyst walk over the final union
+    # planned ~15 copies of it — measured 5.9 s (cells leg) + 2.4 s
+    # (nav leg) per action at sf0.1, collapsing to 2.1 s + 1.2 s over
+    # the checkpoint's LogicalRDD. Values identical (plan_checkpoint
+    # contract); the no-checkpoint plan-audit knob still exposes the
+    # full build plan.
+    # The star rows come straight off the daily aggregate (star_rows):
+    # the dims star_tables derives are that aggregate's own distinct
+    # values, so the six broadcast joins of _star_join (three to build
+    # the fact, three to join the dims back) only dropped NULL-key
+    # rows and added d's calendar levels (the star phase of a build
+    # ran 27 jobs with them, 3 without, sf0.01).
     # ONE partition: the star is bounded by construction — |days in
     # Q1-1995| × |o_orderpriority| × |nations| ≤ 90 × 5 × 25 = 11,250
     # rows at every scale factor (538 at sf0.01) — so
@@ -388,17 +397,12 @@ def olap_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SinglePartition every leg's aggregate and window satisfies: the
     # fan-out plans no Exchange and runs as one job, where a
     # multi-partition checkpoint gave each leg its own adaptive query
-    # stage (88 → 26 jobs per fresh build + collect). The incidents
-    # scan and the orders ⋈ customer join upstream stay parallel.
-    # r12 single-copy policy: the star CACHE is released the moment
-    # the checkpoint materializes; a rebuild re-executes the star from
-    # parquet (the honest fresh-build cost), and the serve path reads
-    # the final checkpoint either way.
-    star = _star_join(spark, sf_dir)
-    sj = plan_checkpoint_single(star, release_after=(star,))
+    # stage. The incidents scan and the orders ⋈ customer join
+    # upstream stay parallel.
+    sj = plan_checkpoint_single(star_rows(incidents(spark, sf_dir)))
     # mdx_category + mdx_district member totals + the full time
     # rollup are ONE grouping-sets aggregate: a single Expand + one
-    # hash aggregate over the cached star join, instead of three
+    # hash aggregate over the star, instead of three
     # separate shuffled aggregation passes. grouping() indicators
     # route each output row to its hierarchy tag. geo DELIBERATELY
     # stays its own pass: folding it in (extra [year, district,
@@ -459,7 +463,7 @@ def olap_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the reference's three MDX queries PLUS the JPivot drill shape
     # (NON EMPTY Crossjoin of both .Children sets), through the REAL
-    # front-end (parse → compile → cells over the same cached star).
+    # front-end (parse → compile → cells over the same star).
     # Batched: the three reference queries' cells are scalar, so
     # mdx_cells_many folds them into ONE conditional aggregation; the
     # drill pair is the one enumerating groupBy — two extra jobs for

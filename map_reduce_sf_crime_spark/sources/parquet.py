@@ -10,8 +10,10 @@ supported for the raw-incident edge via sources/csv_crimes.py.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -35,7 +37,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -127,37 +129,58 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read of events.parquet with ts normalized (see
     :func:`normalize_event_ts`)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     return normalize_event_ts(raw, check_key=sf_dir)
 
 
-#: (path, mtime_ns, size, nanosAsLong) → parquet schema. Every
-#: ``readStream`` needs the schema up front, and inferring it is a
-#: driver-side footer read (~0.1 s) paid per stream build — a query
-#: that starts two concurrent streams paid it twice per build (r11
-#: measurement). Keyed on the file's identity, its mtime/size (a
-#: rewritten file re-infers) and the schema-affecting conf (r12
-#: ADVICE hardening); bounded to one live entry per path.
-_STREAM_SCHEMAS: dict[tuple[str, int, int, str], "object"] = {}
+#: absolute path → ((file identity, nanosAsLong), parquet schema).
+#: ``spark.read.parquet`` without a schema runs a one-task Spark job
+#: that reads a footer to infer it (~0.1 s against ~0.015 s with the
+#: schema given, orders/customer/nation at sf0.01), paid on every read
+#: of every table; ``readStream`` needs the schema up front besides.
+#: The identity (mtime_ns and size; for a directory, each entry's
+#: name, mtime_ns and size) makes a rewritten table re-infer, and the
+#: ``nanosAsLong`` conf the events loaders set changes the inferred
+#: ``ts`` type, so it rides the key: a caller with another setting is
+#: never served a mismatched schema. One entry per path bounds the
+#: dict.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _events_schema(spark: SparkSession, sf_dir: str):
-    path = os.path.join(sf_dir, "events.parquet")
+def _identity(path: str) -> tuple:
     st = os.stat(path)
-    # r12 (ADVICE): the inferred schema depends on nanosAsLong, so the
-    # conf value rides the key — a future caller with a different
-    # setting re-infers instead of being served a conf-mismatched
-    # schema. One entry per path (rewritten files evict their stale
-    # entry) bounds the dict.
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    with os.scandir(path) as entries:
+        return tuple(
+            sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in entries)
+        )
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The inferred schema of the parquet file or directory ``path``,
+    inferred once per process while its files are unchanged. A path
+    that cannot be stat-ed locally (missing, or not a local path) is
+    inferred uncached, so a missing table raises Spark's
+    ``AnalysisException`` as it always did."""
+    try:
+        ident = _identity(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (ident, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
     abspath = os.path.abspath(path)
-    key = (abspath, st.st_mtime_ns, st.st_size, nanos)
-    schema = _STREAM_SCHEMAS.get(key)
-    if schema is None:
-        for stale in [k for k in _STREAM_SCHEMAS if k[0] == abspath]:
-            del _STREAM_SCHEMAS[stale]
-        schema = _STREAM_SCHEMAS[key] = spark.read.parquet(path).schema
+    hit = _SCHEMAS.get(abspath)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[abspath] = (key, schema)
     return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    :func:`parquet_schema`: no inference job after the first read."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,7 +191,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
-        spark.readStream.schema(_events_schema(spark, sf_dir))
+        spark.readStream.schema(
+            parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
+        )
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )

@@ -421,6 +421,30 @@ def test_olap_rollups_fresh_build_job_budget(spark):
     assert jobs <= 55, jobs
 
 
+def test_olap_rollups_fresh_build_reads_star_without_joins(spark):
+    """The star phase reads the daily aggregate directly (star_rows, no
+    dim joins) and each parquet table's schema is inferred once per
+    process, so a fresh olap_rollups build plus collect runs at most
+    20 jobs after every plan cache is released (14 measured at
+    sf0.001, 17 when the schemas are still uninferred; 43 through the
+    six-join star with a schema job per read)."""
+    from map_reduce_sf_crime_spark.functions.caching import release_plan_caches
+    from map_reduce_sf_crime_spark.plans.registry import REGISTRY
+
+    sc = spark.sparkContext
+    group = "olap_rollups_star_job_budget"
+    release_plan_caches()
+    sc.setJobGroup(group, group, False)
+    try:
+        rows = REGISTRY["olap_rollups"].spark(spark, SF_SMOKE).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    release_plan_caches()
+    assert rows
+    assert jobs <= 20, jobs
+
+
 # --------------------------------------------------------------- round 6:
 # the JPivot sort/filter grammar (Order / TopCount / Filter on ROWS)
 

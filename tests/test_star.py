@@ -154,3 +154,71 @@ def test_timeperiod_upsert_stable_surrogate_keys(spark, tmp_path):
     rebuilt = {r.d: r.time_id for r in timeperiod(df_of(feb + jan + mar), "d").collect()}
     assert rebuilt != ids2
     assert rebuilt[jan[0]] == 1  # backfilled date steals id 1
+
+
+def _star_multiset(df):
+    from collections import Counter
+
+    cols = ["crimes", "category", "district", "year", "month", "week", "day"]
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+def _null_key_copy(tmp_path):
+    """A copy of the smoke fixture's orders, customer and nation where
+    every 9th ``o_orderpriority`` and one nation's ``n_name`` are NULL."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def null_where(table, col, mask):
+        i = table.schema.get_field_index(col)
+        nulls = pa.scalar(None, table.schema.field(i).type)
+        return table.set_column(i, col, pc.if_else(pa.array(mask), nulls, table[col]))
+
+    orders = pq.read_table(f"{SF_SMOKE}/orders.parquet")
+    orders = null_where(
+        orders, "o_orderpriority", [i % 9 == 0 for i in range(orders.num_rows)]
+    )
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    nation = pq.read_table(f"{SF_SMOKE}/nation.parquet")
+    nation = null_where(nation, "n_name", [i == 3 for i in range(nation.num_rows)])
+    pq.write_table(nation, tmp_path / "nation.parquet")
+    shutil.copy(f"{SF_SMOKE}/customer.parquet", tmp_path / "customer.parquet")
+    return str(tmp_path)
+
+
+def test_star_rows_equal_star_join(spark, tmp_path):
+    """star_rows (the daily aggregate with NULL keys dropped and the
+    calendar levels attached) holds exactly the rows of the J4 star
+    join over star_tables, on the fixture and on a copy whose category
+    and district names are partly NULL."""
+    from map_reduce_sf_crime_spark.operators.star import star_rows
+    from map_reduce_sf_crime_spark.plans.olap_queries import _star_join
+
+    hostile = _null_key_copy(tmp_path)
+    inc = incidents(spark, hostile)
+    assert inc.filter(F.col("category").isNull()).count() > 0
+    assert inc.filter(F.col("district").isNull()).count() > 0
+    for sf_dir in (SF_SMOKE, hostile):
+        got = _star_multiset(star_rows(incidents(spark, sf_dir)))
+        assert got and got == _star_multiset(_star_join(spark, sf_dir)), sf_dir
+
+
+def test_olap_rollups_matches_star_join_twin_on_null_keys(spark, tmp_path):
+    """olap_rollups reads star_rows; its DuckDB twin keeps Mondrian's
+    star join. With NULL category and district names in the input the
+    two still agree, compared through the gate's canonical form."""
+    import duckdb
+
+    from map_reduce_sf_crime_spark.plans.registry import REGISTRY
+    from tools.check_oracle import canon
+
+    hostile = _null_key_copy(tmp_path)
+    spec = REGISTRY["olap_rollups"]
+    got = spec.spark(spark, hostile).toPandas()
+    con = duckdb.connect()
+    for t in ("orders", "customer", "nation"):
+        con.sql(f"create view {t} as select * from '{hostile}/{t}.parquet'")
+    assert canon(got) == canon(con.sql(spec.oracle).df())

@@ -18,9 +18,12 @@ where the gate failed; this version is deliberately gate-faithful.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this file belongs to: its package is the one checked.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import pandas as pd
