@@ -11,6 +11,10 @@ the same code deploys unchanged to a 1000-executor cluster:
 - UTC session timezone so results compare bit-for-bit with the DuckDB
   oracle (duckdb timestamps are UTC-naive).
 - Arrow enabled for the Pandas-UDF slow path.
+- Driver G1 regions pinned at 4 MiB and broadcast pieces at 1 MiB, so
+  Spark's 1 MiB serialization chunks and its broadcast pieces are young
+  objects, not humongous ones, at any heap size (see
+  ``_DRIVER_GC_OPTIONS``).
 """
 
 from __future__ import annotations
@@ -22,6 +26,22 @@ from pyspark.sql import SparkSession
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+#: G1 allocates an object of half a region or more as "humongous":
+#: straight into old-generation regions, and each such allocation can
+#: start a concurrent cycle. G1 sizes regions from the heap: 1 MiB up
+#: to a 2 GiB heap, 4 MiB at 8 GiB (the engine's default driver heap).
+#: Spark serializes every stage's task binary and every collected
+#: result into 1 MiB chunks, and cuts every broadcast into pieces of
+#: ``spark.broadcast.blockSize`` (4 MiB by default). On a 1 GiB driver
+#: heap all of those were humongous, and they started about half the
+#: young GCs of a report_chain run at sf0.01. G1 grows the heap
+#: by the share of time spent in GC pauses, so the committed heap then
+#: ranged over 500-670 MB with the host's load. With 4 MiB regions and
+#: 1 MiB pieces none of those buffers is humongous, at any heap size.
+_DRIVER_GC_OPTIONS = "-XX:G1HeapRegionSize=4m"
+_BROADCAST_BLOCK_SIZE = "1m"
 
 
 def get_spark(app_name: str = "map_reduce_sf_crime_spark") -> SparkSession:
@@ -44,6 +64,10 @@ def get_spark(app_name: str = "map_reduce_sf_crime_spark") -> SparkSession:
         # the lakehouse layer depends on.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # JVM flags only take effect when this call launches the JVM;
+        # defaultJavaOptions leaves extraJavaOptions to the caller
+        .config("spark.driver.defaultJavaOptions", _DRIVER_GC_OPTIONS)
+        .config("spark.broadcast.blockSize", _BROADCAST_BLOCK_SIZE)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
