@@ -1268,7 +1268,8 @@ def _train_matrix(emb: DataFrame, train_rows: int):
 
     Why hash order and not the head (round-8 verdict #1): vec_ids
     follow ingestion, and ingestion follows content — the zipf-SORTED
-    fixture in tools/scale_probe.py models exactly that — so the old
+    fixture of BASELINE.md's round-8 quantizer table models exactly
+    that — so the old
     ``orderBy(vec_id).limit(n)`` head slice trained every quantizer
     on the corpus's FIRST content only; at 100 TB, vectors past the
     first ``train_rows`` ids contributed nothing to centroid

@@ -31,9 +31,13 @@ reference's truncate-then-insert (K4), without its read-gap.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import manifests
 
 
 def write_partitioned(
@@ -91,23 +95,47 @@ def read_partitioned(
 # intent+commit pair, returning the state to CLEAN. All file I/O
 # goes through the Hadoop FileSystem API, so the manifest works on
 # any Hadoop-compatible store (local, HDFS, S3A), not just local
-# disk.
+# disk. Reading the log (load, fold, live/archive resolution) is
+# `sources.manifests`, shared with the lakehouse_cdf stream reader.
 
-_COMMITS_DIR = "_commits"
+_COMMITS_DIR = manifests.COMMITS_DIR
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-#: Manifest schema version (2 = table-root-relative inventory keys,
-#: version-stamped). Manifests WITHOUT the stamp predate it and the
-#: key spelling is unverifiable, so strict readers (table_state /
-#: assert_committed) refuse them loudly rather than risk
-#: mis-comparing inventories as torn/clean; vacuum_commits is the
-#: sanctioned discard path.
-_MANIFEST_FORMAT = 2
 
 
 def _hfs(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+
+
+def _hfs_ls(spark: SparkSession, path: str) -> manifests.Ls:
+    """The manifests ``ls`` over ``path``'s Hadoop FileSystem: one
+    ``listStatus`` call a directory, an absent one listing empty."""
+    fs, jvm = _hfs(spark, path)
+    not_found = jvm.java.io.FileNotFoundException._java_lang_class
+
+    def ls(d: str) -> dict[str, int | None]:
+        try:
+            statuses = fs.listStatus(jvm.org.apache.hadoop.fs.Path(d))
+        except Py4JJavaError as e:
+            if not not_found.isInstance(e.java_exception):
+                raise
+            return {}
+        return {
+            st.getPath().getName(): int(st.getLen()) if st.isFile() else None
+            for st in statuses
+        }
+
+    return ls
+
+
+def _commit_log(
+    spark: SparkSession, path: str, strict: bool = True
+) -> manifests.CommitLog:
+    read_json = partial(_read_json, spark)
+    return manifests.CommitLog(
+        _hfs_ls(spark, path), read_json, path.rstrip("/"), strict
+    )
 
 
 def _spelled_keys(df: DataFrame, partition_cols: list[str]) -> list[tuple]:
@@ -155,19 +183,12 @@ def _inventory(
     touched partitions (data files only; empty list when the dir is
     absent). Keys are RELATIVE subpaths — see
     :func:`_partition_subpath`."""
-    fs, jvm = _hfs(spark, path)
-    inv: dict[str, list[list]] = {}
-    for key in keys:
-        sub = _partition_subpath(spark, partition_cols, key)
-        jp = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{sub}")
-        files: list[list] = []
-        if fs.exists(jp):
-            for st in fs.listStatus(jp):
-                name = st.getPath().getName()
-                if st.isFile() and not name.startswith((".", "_")):
-                    files.append([name, int(st.getLen())])
-        inv[sub] = sorted(files)
-    return inv
+    ls = _hfs_ls(spark, path)
+    subs = [_partition_subpath(spark, partition_cols, key) for key in keys]
+    return {
+        sub: manifests.inventory(ls(f"{path.rstrip('/')}/{sub}"))
+        for sub in subs
+    }
 
 
 def _write_json(spark: SparkSession, file_path: str, obj: dict) -> None:
@@ -190,21 +211,13 @@ def _read_json(spark: SparkSession, file_path: str) -> dict:
 
     fs, jvm = _hfs(spark, file_path)
     stream = fs.open(jvm.org.apache.hadoop.fs.Path(file_path))
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(stream, "UTF-8")
-    )
-    lines = []
-    while True:
-        ln = reader.readLine()
-        if ln is None:
-            break
-        lines.append(ln)
-    reader.close()
-    return json.loads("\n".join(lines))
+    try:  # one JVM call for the whole file, not one per line
+        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
 
 
 _LEASE_NAME = "_lease.json"
-_ARCHIVE_SUFFIX = ".archive"
 #: Default writer-lease time-to-live. A lease older than this (by
 #: filesystem mtime) is presumed to belong to a DEAD writer and may
 #: be broken; sized far above any local merge/compaction and
@@ -411,19 +424,6 @@ def _active_intent_conflicts(
     return out
 
 
-def _commit_ids(spark: SparkSession, path: str) -> list[int]:
-    fs, jvm = _hfs(spark, path)
-    cdir = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{_COMMITS_DIR}")
-    if not fs.exists(cdir):
-        return []
-    ids = set()
-    for st in fs.listStatus(cdir):
-        name = st.getPath().getName()
-        if name.endswith(".intent.json"):
-            ids.add(int(name.split(".")[0]))
-    return sorted(ids)
-
-
 def begin_commit(
     spark: SparkSession,
     path: str,
@@ -440,13 +440,14 @@ def begin_commit(
     conflict check + this registration. ``extra`` merges additional
     fields into the intent (e.g. the partition-scoped protocol's
     scope/ttl tags)."""
-    ids = _commit_ids(spark, path)
+    ls = _hfs_ls(spark, path)
+    ids = manifests.commit_ids(ls(f"{path.rstrip('/')}/{_COMMITS_DIR}"))
     cid = (ids[-1] + 1) if ids else 0
     _write_json(
         spark,
         f"{path.rstrip('/')}/{_COMMITS_DIR}/{cid:06d}.intent.json",
         {
-            "format": _MANIFEST_FORMAT,
+            "format": manifests.MANIFEST_FORMAT,
             "id": cid,
             "partition_cols": partition_cols,
             "keys": [list(k) for k in keys],
@@ -466,56 +467,11 @@ def finish_commit(spark: SparkSession, path: str, cid: int) -> None:
         spark,
         f"{path.rstrip('/')}/{_COMMITS_DIR}/{cid:06d}.commit.json",
         {
-            "format": _MANIFEST_FORMAT,
+            "format": manifests.MANIFEST_FORMAT,
             "id": cid,
             "post": _inventory(spark, path, intent["partition_cols"], keys),
         },
     )
-
-
-def _manifest_meta(spark: SparkSession, path: str, strict: bool):
-    """Load every manifest pair: ``(ids, {id: (intent, post|None)},
-    legacy_ids)``. ``strict=True`` raises on a manifest without the
-    current format stamp (readers must not mis-compare it);
-    ``strict=False`` marks it legacy (``meta[id] = (None, None)``) so
-    vacuum can discard it."""
-    ids = _commit_ids(spark, path)
-    fs, jvm = _hfs(spark, path)
-    root = path.rstrip("/")
-    meta, legacy = {}, set()
-    for cid in ids:
-        base = f"{root}/{_COMMITS_DIR}/{cid:06d}"
-        try:
-            intent = _read_json(spark, f"{base}.intent.json")
-        except ValueError:
-            # a crash inside _write_json leaves an empty/truncated
-            # file; unreadable ≈ old-format: strict readers refuse
-            # loudly, vacuum treats it as discardable history
-            intent = None
-        if intent is None or intent.get("format") != _MANIFEST_FORMAT:
-            if strict:
-                fmt = "unreadable" if intent is None else repr(intent.get("format"))
-                raise RuntimeError(
-                    f"manifest {base}.intent.json is {fmt} (this engine "
-                    f"reads format {_MANIFEST_FORMAT}); after a fresh "
-                    "rewrite, vacuum_commits(keep_last=1) drops "
-                    "old-format/unreadable manifests"
-                )
-            legacy.add(cid)
-            meta[cid] = (None, None)
-            continue
-        post = None
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}.commit.json")):
-            try:
-                post = _read_json(spark, f"{base}.commit.json")["post"]
-            except (ValueError, KeyError):
-                # a torn finish_commit (created-then-crashed file) is
-                # the same state as no commit marker: the intent is
-                # unfinished, the re-run recovery + resolution
-                # machinery (and vacuum, once resolved) handle it
-                post = None
-        meta[cid] = (intent, post)
-    return ids, meta, legacy
 
 
 def _unresolved(ids: list[int], meta: dict) -> dict[int, set[str]]:
@@ -566,7 +522,8 @@ def table_state(spark: SparkSession, path: str) -> dict:
     untouched and must not clear it) — or shows it definitively
     EMPTY. This is exactly what the documented re-run recovery
     produces."""
-    ids, meta, legacy = _manifest_meta(spark, path, strict=True)
+    log = _commit_log(spark, path)
+    ids, meta = log.ids, log.meta
     if not ids:
         return {"status": "clean", "detail": "no manifest history", "suspect": []}
     unresolved = _unresolved(ids, meta)
@@ -583,7 +540,7 @@ def table_state(spark: SparkSession, path: str) -> dict:
             "the same operation to recover",
             "suspect": sorted(suspect),
         }
-    committed_ids = [cid for cid in ids if meta[cid][1] is not None]
+    committed_ids = log.committed()
     if not committed_ids:
         # only unfinished-but-empty intents (e.g. a crash during a
         # zero-partition merge): nothing was claimed about any data
@@ -594,10 +551,11 @@ def table_state(spark: SparkSession, path: str) -> dict:
             "suspect": [],
         }
     last = committed_ids[-1]
-    intent, post = meta[last]
-    keys = [tuple(k) for k in intent["keys"]]
-    now = _inventory(spark, path, intent["partition_cols"], keys)
-    bad = sorted(p for p, files in post.items() if now.get(p) != files)
+    post = meta[last][1]
+    bad = sorted(
+        p for p, files in post.items()
+        if manifests.inventory(log.ls(f"{log.root}/{p}")) != files
+    )
     if bad:
         return {
             "status": "torn",
@@ -635,7 +593,8 @@ def vacuum_commits(spark: SparkSession, path: str, keep_last: int = 10) -> int:
     genuinely UNRESOLVED intent is never dropped — it is the evidence
     ``table_state`` needs, and the fix is the documented re-run
     recovery, not retention."""
-    ids, meta, legacy = _manifest_meta(spark, path, strict=False)
+    log = _commit_log(spark, path, strict=False)
+    ids, meta, legacy = log.ids, log.meta, log.legacy
     fs, jvm = _hfs(spark, path)
     unresolved = _unresolved(
         [cid for cid in ids if cid not in legacy], meta
@@ -648,16 +607,12 @@ def vacuum_commits(spark: SparkSession, path: str, keep_last: int = 10) -> int:
     ]
     for cid in drop:
         base = f"{path.rstrip('/')}/{_COMMITS_DIR}/{cid:06d}"
-        for suffix in (".intent.json", ".commit.json"):
-            p = jvm.org.apache.hadoop.fs.Path(base + suffix)
-            if fs.exists(p):
-                fs.delete(p, False)
         # a dropped manifest's archived pre-images go with it: without
         # the manifest the snapshot is unreconstructable anyway, and
         # the archive is the retention cost vacuum exists to bound
-        arch = jvm.org.apache.hadoop.fs.Path(base + _ARCHIVE_SUFFIX)
-        if fs.exists(arch):
-            fs.delete(arch, True)
+        # (delete of an absent path returns false)
+        for suffix in (".intent.json", ".commit.json", manifests.ARCHIVE_SUFFIX):
+            fs.delete(jvm.org.apache.hadoop.fs.Path(base + suffix), True)
     return len(drop)
 
 
@@ -679,7 +634,7 @@ def _archive_pre_images(
         if not files:
             continue
         dst_dir = jvm.org.apache.hadoop.fs.Path(
-            f"{root}/{_COMMITS_DIR}/{cid:06d}{_ARCHIVE_SUFFIX}/{sub}"
+            f"{root}/{_COMMITS_DIR}/{cid:06d}{manifests.ARCHIVE_SUFFIX}/{sub}"
         )
         fs.mkdirs(dst_dir)
         for name, _length in files:
@@ -715,9 +670,10 @@ def read_as_of(spark: SparkSession, path: str, cid: int) -> DataFrame:
     opt-in retention, not magic). Files are read in per-root groups
     with ``basePath`` set so hive partition columns resolve for live
     and archived locations alike."""
-    ids, meta, _legacy = _manifest_meta(spark, path, strict=True)
-    _require_committed(ids, meta, cid, path, "read_as_of")
-    out = _read_groups(spark, _snapshot_groups(spark, path, cid, ids, meta))
+    log = _commit_log(spark, path)
+    log.require_committed(cid, "read_as_of")
+    subs = log.universe(len(log.meta[cid][0]["partition_cols"]))
+    out = _read_resolved(spark, log.resolve(cid, subs))
     if out is None:
         raise ValueError(
             f"read_as_of: commit {cid} describes an empty table"
@@ -725,118 +681,16 @@ def read_as_of(spark: SparkSession, path: str, cid: int) -> DataFrame:
     return out
 
 
-def _require_committed(
-    ids: list[int], meta: dict, cid: int, path: str, who: str
-) -> None:
-    if cid not in ids or meta[cid][1] is None:
-        raise ValueError(
-            f"{who}: commit {cid} is unknown or never committed at "
-            f"{path} (committed ids: "
-            f"{[i for i in ids if meta[i][1] is not None]})"
-        )
-
-
-def _snapshot_groups(
-    spark: SparkSession,
-    path: str,
-    cid: int,
-    ids: list[int],
-    meta: dict,
-    only_subs: set[str] | None = None,
-) -> dict[str, list[str]]:
-    """Resolve commit ``cid``'s state to concrete parquet files,
-    grouped by the ``basePath`` root each must be read under (live
-    table root, or a later commit's ``.archive`` root). The manifest
-    fold and live/archive resolution documented on :func:`read_as_of`
-    live here so the change feed (:func:`read_changes`) shares them;
-    ``only_subs`` restricts resolution to the named partition
-    subpaths (the feed's touched-partition pruning). Raises when a
-    wanted file's bytes are gone."""
-    root = path.rstrip("/")
-    fs, jvm = _hfs(spark, path)
-    part_cols = meta[cid][0]["partition_cols"]
-    if only_subs is not None:
-        subs = set(only_subs)
-    else:
-        # partition universe: every subpath any manifest mentions,
-        # plus live partition directories (never-manifested ones)
-        subs = set()
-        for i in ids:
-            intent, post = meta[i]
-            if intent is not None:
-                subs.update(intent["pre"].keys())
-            if post is not None:
-                subs.update(post.keys())
-
-        def _live_dirs(base: str, depth: int) -> list[str]:
-            if depth == 0:
-                return [base]
-            out = []
-            jb = jvm.org.apache.hadoop.fs.Path(
-                f"{root}/{base}" if base else root
-            )
-            if not fs.exists(jb):
-                return []
-            for st in fs.listStatus(jb):
-                name = st.getPath().getName()
-                if st.isDirectory() and "=" in name and not name.startswith("_"):
-                    child = f"{base}/{name}" if base else name
-                    out.extend(_live_dirs(child, depth - 1))
-            return out
-
-        subs.update(_live_dirs("", len(part_cols)))
-
-    def _state_at(sub: str):
-        best = None
-        for i in ids:
-            intent, post = meta[i]
-            if i <= cid and post is not None and sub in post:
-                best = ("post", i, post[sub])
-        if best is not None:
-            return best[2]
-        for i in ids:
-            intent, post = meta[i]
-            if i > cid and intent is not None and sub in intent["pre"]:
-                return intent["pre"][sub]
-        # never manifested: live listing
-        files = []
-        jp = jvm.org.apache.hadoop.fs.Path(f"{root}/{sub}")
-        if fs.exists(jp):
-            for st in fs.listStatus(jp):
-                name = st.getPath().getName()
-                if st.isFile() and not name.startswith((".", "_")):
-                    files.append([name, int(st.getLen())])
-        return files
-
-    later_ids = [i for i in ids if i > cid and meta[i][0] is not None]
-    groups: dict[str, list[str]] = {}  # basePath root → file paths
-    missing: list[str] = []
-    for sub in sorted(subs):
-        for name, length in _state_at(sub):
-            live = f"{root}/{sub}/{name}"
-            jlive = jvm.org.apache.hadoop.fs.Path(live)
-            if fs.exists(jlive) and int(fs.getFileStatus(jlive).getLen()) == int(length):
-                groups.setdefault(root, []).append(live)
-                continue
-            for i in later_ids:
-                arch_root = f"{root}/{_COMMITS_DIR}/{i:06d}{_ARCHIVE_SUFFIX}"
-                cand = f"{arch_root}/{sub}/{name}"
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(cand)):
-                    groups.setdefault(arch_root, []).append(cand)
-                    break
-            else:
-                missing.append(f"{sub}/{name}")
-    if missing:
-        raise ValueError(
-            f"commit {cid}'s files are gone (overwritten "
-            "without archive=True, or vacuumed): " + ", ".join(missing)
-        )
-    return groups
-
-
-def _read_groups(
-    spark: SparkSession, groups: dict[str, list[str]]
+def _read_resolved(
+    spark: SparkSession, resolved: dict[str, list[tuple[str, str]]]
 ) -> DataFrame | None:
+    """Read :meth:`manifests.CommitLog.resolve` output in one scan per
+    ``basePath`` root, so hive partition columns resolve for live and
+    archived files alike; ``None`` when it names no file."""
+    groups: dict[str, list[str]] = {}
+    for files in resolved.values():
+        for base_root, f in files:
+            groups.setdefault(base_root, []).append(f)
     out = None
     for base_root, files in groups.items():
         df = spark.read.option("basePath", base_root).parquet(*files)
@@ -889,17 +743,10 @@ def read_changes(
         raise ValueError(
             f"read_changes: from_cid {from_cid} > to_cid {to_cid}"
         )
-    ids, meta, _legacy = _manifest_meta(spark, path, strict=True)
-    _require_committed(ids, meta, from_cid, path, "read_changes")
-    _require_committed(ids, meta, to_cid, path, "read_changes")
-
-    touched: set[str] = set()
-    for i in ids:
-        intent, post = meta[i]
-        if from_cid < i <= to_cid and intent is not None:
-            touched.update(intent["pre"].keys())
-            if post is not None:
-                touched.update(post.keys())
+    log = _commit_log(spark, path)
+    log.require_committed(from_cid, "read_changes")
+    log.require_committed(to_cid, "read_changes")
+    touched = log.touched(from_cid, to_cid)
 
     def _empty() -> DataFrame:
         schema = spark.read.parquet(path).schema.add(
@@ -909,13 +756,9 @@ def read_changes(
 
     if not touched:
         return _empty()
-    pre_df = _read_groups(
-        spark,
-        _snapshot_groups(spark, path, from_cid, ids, meta, only_subs=touched),
-    )
-    post_df = _read_groups(
-        spark,
-        _snapshot_groups(spark, path, to_cid, ids, meta, only_subs=touched),
+    pre_df, post_df = (
+        _read_resolved(spark, log.resolve(cid, touched))
+        for cid in (from_cid, to_cid)
     )
     if pre_df is None and post_df is None:
         return _empty()

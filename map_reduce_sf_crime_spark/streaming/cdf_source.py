@@ -32,19 +32,22 @@ the global diff is the disjoint union of per-partition diffs. Work
 per batch is churn-sized: partitions untouched by the commit range
 are never listed, opened, or shipped.
 
-This module resolves snapshots with ``os``-level listings (a PURE
-PYTHON twin of the JVM-side fold in ``sources.lakehouse`` — the
-stream reader runs in Python workers where no SparkSession exists),
-so it serves local and NFS-style paths; object-store deployments
-would swap the thin ``_ls``/``_read_json`` shims for fsspec. Parity
-of the two folds is pinned in tests/test_streaming.py by comparing
+Snapshots resolve through ``sources.manifests``, the same commit-log
+fold the batch readers use. This reader hands it ``os`` listings
+(``manifests.local_ls``): ``partitions()`` and ``latestOffset()`` run
+in Python workers where no SparkSession exists, so the source serves
+local and NFS-style paths; an object-store deployment would pass
+fsspec-backed ``ls``/``read_json`` callables instead. Only the diff
+differs from ``read_changes``: a Spark full-outer join there, a
+per-partition pandas merge here; tests/test_streaming.py compares
 every micro-batch against ``read_changes`` on the same commits.
 """
 
 from __future__ import annotations
 
-import json
-import os
+import datetime
+import decimal
+import re
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -53,115 +56,22 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_COMMITS_DIR = "_commits"
-_ARCHIVE_SUFFIX = ".archive"
-_MANIFEST_FORMAT = 2
+from ..sources import manifests
+
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _CHANGE_COL = "_change_type"
 #: merge sentinel for NULL key values (null-safe equality twin)
 _NULL_KEY = "\x00__cdf_null_key__\x00"
 
 
-# ---------------------------------------------------------------------------
-# pure-python manifest fold (twin of sources.lakehouse._snapshot_groups)
-# ---------------------------------------------------------------------------
-
-
-def _read_manifest(p: str) -> dict | None:
-    try:
-        with open(p, "r", encoding="utf-8") as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def _manifest_meta(root: str):
-    """(ids, {id: (intent, post|None)}) for format-2 manifests; raises
-    on unreadable/old-format intents like the strict JVM reader."""
-    cdir = os.path.join(root, _COMMITS_DIR)
-    ids = sorted(
-        int(n.split(".")[0])
-        for n in (os.listdir(cdir) if os.path.isdir(cdir) else [])
-        if n.endswith(".intent.json")
+def _log(root: str) -> manifests.CommitLog:
+    return manifests.CommitLog(
+        manifests.local_ls, manifests.local_read_json, root
     )
-    meta = {}
-    for cid in ids:
-        base = os.path.join(cdir, f"{cid:06d}")
-        intent = _read_manifest(base + ".intent.json")
-        if intent is None or intent.get("format") != _MANIFEST_FORMAT:
-            raise RuntimeError(
-                f"manifest {base}.intent.json is unreadable or not format "
-                f"{_MANIFEST_FORMAT}; vacuum_commits(keep_last=1) after a "
-                "fresh rewrite drops old-format manifests"
-            )
-        post_doc = _read_manifest(base + ".commit.json")
-        post = post_doc.get("post") if isinstance(post_doc, dict) else None
-        meta[cid] = (intent, post)
-    return ids, meta
 
 
-def _committed_ids(root: str) -> list[int]:
-    ids, meta = _manifest_meta(root)
-    return [i for i in ids if meta[i][1] is not None]
-
-
-def _snapshot_files(
-    root: str, cid: int, ids: list[int], meta: dict, subs: set[str]
-) -> dict[str, list[str]]:
-    """{subpath: [absolute file paths]} describing commit ``cid``'s
-    state of each subpath — live bytes when still present at the
-    manifested length, else the archived pre-image copy; missing
-    retention raises (never mis-reads)."""
-
-    def _state_at(sub: str):
-        best = None
-        for i in ids:
-            intent, post = meta[i]
-            if i <= cid and post is not None and sub in post:
-                best = post[sub]
-        if best is not None:
-            return best
-        for i in ids:
-            intent, _post = meta[i]
-            if i > cid and intent is not None and sub in intent["pre"]:
-                return intent["pre"][sub]
-        live_dir = os.path.join(root, sub)
-        if not os.path.isdir(live_dir):
-            return []
-        return sorted(
-            [n, os.path.getsize(os.path.join(live_dir, n))]
-            for n in os.listdir(live_dir)
-            if os.path.isfile(os.path.join(live_dir, n))
-            and not n.startswith((".", "_"))
-        )
-
-    later_ids = [i for i in ids if i > cid]
-    out: dict[str, list[str]] = {}
-    missing: list[str] = []
-    for sub in sorted(subs):
-        files = []
-        for name, length in _state_at(sub):
-            live = os.path.join(root, sub, name)
-            if os.path.isfile(live) and os.path.getsize(live) == int(length):
-                files.append(live)
-                continue
-            for i in later_ids:
-                cand = os.path.join(
-                    root, _COMMITS_DIR, f"{i:06d}{_ARCHIVE_SUFFIX}", sub, name
-                )
-                if os.path.isfile(cand):
-                    files.append(cand)
-                    break
-            else:
-                missing.append(f"{sub}/{name}")
-        if files:
-            out[sub] = files
-    if missing:
-        raise ValueError(
-            f"lakehouse_cdf: commit {cid}'s files are gone (overwritten "
-            "without archive=True, or vacuumed): " + ", ".join(missing)
-        )
-    return out
+def _paths(resolved: dict, sub: str) -> list[str]:
+    return [f for _base, f in resolved.get(sub, [])]
 
 
 def _parse_subpath(sub: str, part_cols: list[str]) -> dict[str, str | None]:
@@ -176,50 +86,79 @@ def _parse_subpath(sub: str, part_cols: list[str]) -> dict[str, str | None]:
     return {c: vals.get(c) for c in part_cols}
 
 
-def _infer_part_type(values: list[str | None]) -> str:
-    """Spark-style (restricted) hive partition value typing: int →
-    bigint → double → string, nulls ignored; all-null → string."""
+_INT_RE = re.compile(r"[+-]?\d+")
+#: what Java's Double.parseDouble reads, short of hex and type suffixes
+_DOUBLE_RE = re.compile(r"[+-]?((\d+\.?\d*|\.\d+)([eE][+-]?\d+)?|NaN|Infinity)")
+_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
+#: Spark's partition timestamp pattern ``yyyy-MM-dd HH:mm:ss[.S]``
+#: takes at most ONE fractional digit; longer fractions type as string
+_TIMESTAMP_RE = re.compile(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}(\.\d)?")
 
-    def _all(pred) -> bool:
-        seen = False
-        for v in values:
-            if v is None:
-                continue
-            seen = True
-            if not pred(v):
-                return False
-        return seen
 
-    def _is_int(v: str) -> bool:
-        try:
-            int(v)
-            return True
-        except ValueError:
-            return False
-
-    def _is_float(v: str) -> bool:
-        try:
-            float(v)
-            return True
-        except ValueError:
-            return False
-
-    if _all(lambda v: _is_int(v) and -(2**31) <= int(v) < 2**31):
-        return "int"
-    if _all(_is_int):
-        return "bigint"
-    if _all(_is_float):
+def _value_type(v: str) -> str:
+    """Spark's type for one hive partition value: the first of int,
+    bigint, decimal, double, timestamp, date that parses it, else
+    string. Spark types a number with no fractional digits past
+    bigint (``1e5``, 20 digits) as decimal, which this source does
+    not carry: such a value raises."""
+    if _INT_RE.fullmatch(v):
+        n = int(v)
+        if -(2**31) <= n < 2**31:
+            return "int"
+        if -(2**63) <= n < 2**63:
+            return "bigint"
+    if _DOUBLE_RE.fullmatch(v):
+        finite = v.lstrip("+-") not in ("NaN", "Infinity")
+        if finite and decimal.Decimal(v).as_tuple().exponent >= 0:
+            raise ValueError(
+                f"lakehouse_cdf: partition value {v!r} is a decimal to "
+                "Spark; decimal partition columns are not supported"
+            )
         return "double"
+    for ddl, pattern in (("timestamp", _TIMESTAMP_RE), ("date", _DATE_RE)):
+        if pattern.fullmatch(v):
+            try:
+                _cast_part_value(v, ddl)
+                return ddl
+            except ValueError:  # e.g. month 13
+                pass
+    return "string"
+
+
+def _infer_part_type(values: list[str | None]) -> str:
+    """Spark's hive partition column typing: the widest of the
+    values' types, with Spark's partition widening (bigint and double,
+    or a number and a date, have no common type but string); nulls
+    are ignored and an all-null column is string."""
+    kinds = {_value_type(v) for v in values if v is not None}
+    if len(kinds) == 1:
+        return kinds.pop()
+    for wider, family in (
+        ("bigint", {"int", "bigint"}),
+        ("double", {"int", "double"}),
+        ("timestamp", {"date", "timestamp"}),
+    ):
+        if kinds and kinds <= family:
+            return wider
     return "string"
 
 
 def _cast_part_value(v: str | None, ddl: str):
+    """A hive partition value as ``ddl``'s Python type. Timestamps are
+    wall-clock strings in the writing session's time zone, which
+    ``session.get_spark`` pins to UTC."""
     if v is None:
         return None
     if ddl == "int" or ddl == "bigint":
         return int(v)
     if ddl == "double":
         return float(v)
+    if ddl == "date":
+        return datetime.date.fromisoformat(v)
+    if ddl == "timestamp":
+        return datetime.datetime.fromisoformat(v).replace(
+            tzinfo=datetime.timezone.utc
+        )
     return v
 
 
@@ -304,23 +243,19 @@ class LakehouseChangeFeed(DataSource):
         import pyarrow.parquet as pq
 
         root = self._root()
-        ids, meta = _manifest_meta(root)
-        committed = [i for i in ids if meta[i][1] is not None]
+        log = _log(root)
+        committed = log.committed()
         if not committed:
             raise ValueError(
                 f"lakehouse_cdf: no committed manifests at {root} — the "
                 "feed needs at least the first committed merge"
             )
         latest = committed[-1]
-        part_cols = meta[latest][0]["partition_cols"]
-        subs: set[str] = set()
-        for i in ids:
-            intent, post = meta[i]
-            subs.update(intent["pre"].keys())
-            if post is not None:
-                subs.update(post.keys())
-        groups = _snapshot_files(root, latest, ids, meta, subs)
-        sample = next((fs[0] for fs in groups.values() if fs), None)
+        part_cols = log.meta[latest][0]["partition_cols"]
+        # the partition universe read_as_of resolves, so the column
+        # types match what Spark infers over the same directories
+        groups = log.resolve(latest, log.universe(len(part_cols)))
+        sample = next((_paths(groups, sub)[0] for sub in groups), None)
         if sample is None:
             raise ValueError(
                 f"lakehouse_cdf: commit {latest} describes an empty table"
@@ -377,15 +312,12 @@ class _CDFStreamReader(DataSourceStreamReader):
                 f"(got {max_commits})"
             )
         self._max_commits = max_commits
+        log = _log(root)
         if starting_cid is not None:
-            if starting_cid not in _committed_ids(root):
-                raise ValueError(
-                    f"lakehouse_cdf: startingCid {starting_cid} is not a "
-                    f"committed id at {self._root}"
-                )
+            log.require_committed(starting_cid, "lakehouse_cdf startingCid")
             self._start = starting_cid
         else:
-            self._start = _committed_ids(root)[-1]
+            self._start = log.committed()[-1]
         # progress watermark for the admission cap; checkpointed starts
         # re-sync it at partitions() time, so the cap is best-effort
         # for the first post-restart batch only
@@ -395,7 +327,7 @@ class _CDFStreamReader(DataSourceStreamReader):
         return {"cid": self._start}
 
     def latestOffset(self) -> dict:
-        ids = _committed_ids(self._root)
+        ids = _log(self._root).committed()
         if self._max_commits is None:
             return {"cid": ids[-1]}
         # walk the COMMITTED id list, never id arithmetic: commit ids
@@ -414,28 +346,21 @@ class _CDFStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         a, b = int(start["cid"]), int(end["cid"])
         self._seen = max(self._seen, b)
-        ids, meta = _manifest_meta(self._root)
-        part_cols = meta[ids[-1]][0]["partition_cols"]
-        touched: set[str] = set()
-        for i in ids:
-            intent, post = meta[i]
-            if a < i <= b:
-                touched.update(intent["pre"].keys())
-                if post is not None:
-                    touched.update(post.keys())
-        pre = _snapshot_files(self._root, a, ids, meta, touched)
-        post = _snapshot_files(self._root, b, ids, meta, touched)
+        log = _log(self._root)
+        part_cols = log.meta[b][0]["partition_cols"]
+        touched = log.touched(a, b)
+        pre, post = log.resolve(a, touched), log.resolve(b, touched)
         parts = [
             InputPartition(
                 {
                     "sub": sub,
-                    "pre": pre.get(sub, []),
-                    "post": post.get(sub, []),
+                    "pre": _paths(pre, sub),
+                    "post": _paths(post, sub),
                     "part_vals": _parse_subpath(sub, part_cols),
                 }
             )
             for sub in sorted(touched)
-            if pre.get(sub) or post.get(sub)
+            if sub in pre or sub in post
         ]
         # zero-work batch (e.g. a merge whose change frame was empty):
         # the engine still plans it, so hand it one no-op partition

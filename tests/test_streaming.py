@@ -668,6 +668,54 @@ def test_cdf_capped_offset_skips_torn_commit_ids(spark, tmp_path):
     assert r.latestOffset() == {"cid": 2}  # nothing further
 
 
+@pytest.mark.parametrize("ptype", ["date", "timestamp"])
+def test_cdf_types_date_partitions_like_read_changes(spark, tmp_path, ptype):
+    """Hive partition values that Spark infers as date or timestamp
+    get the same type in the lakehouse_cdf schema as in read_changes
+    over the same table, and a date partition's values read back as
+    the dates read_changes emits."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from map_reduce_sf_crime_spark.sources.lakehouse import (
+        merge_upsert,
+        read_changes,
+        write_partitioned,
+    )
+    from map_reduce_sf_crime_spark.streaming.cdf_source import (
+        LakehouseChangeFeed,
+        _CDFStreamReader,
+    )
+
+    path = str(tmp_path / f"{ptype}_fact")
+    base = spark.range(6).select(
+        F.col("id"),
+        (F.col("id") * 10).alias("v"),
+        F.expr(
+            "timestamp'2024-01-01 06:30:00'"
+            " + make_interval(0, 0, 0, cast(id % 3 as int))"
+        )
+        .cast(ptype)
+        .alias("d"),
+    )
+    write_partitioned(base, path, ["d"])
+    merge_upsert(spark, path, base.filter("id < 2").localCheckpoint(),
+                 key_cols=["id"], partition_cols=["d"], archive=True)  # c0
+    merge_upsert(spark, path,
+                 base.filter("id % 2 = 0").withColumn("v", F.lit(-1)).localCheckpoint(),
+                 key_cols=["id"], partition_cols=["d"], archive=True)  # c1
+
+    want = read_changes(spark, path, 0, 1, ["id"])
+    assert f"d:{ptype}" in want.schema.simpleString()
+    schema = _parse_datatype_string(
+        LakehouseChangeFeed({"path": path, "keyCols": "id"}).schema()
+    )
+    assert schema.simpleString() == want.schema.simpleString()
+    if ptype == "date":
+        r = _CDFStreamReader(path, ["id"], schema, starting_cid=0)
+        got = [row for p in r.partitions({"cid": 0}, {"cid": 1}) for row in r.read(p)]
+        assert sorted(got) == sorted(tuple(row) for row in want.collect())
+
+
 @pytest.mark.slow
 def test_streaming_postings_maintenance_serves_live_corpus(spark, tmp_path):
     """The reusable maintenance loop (streaming/index_maintenance):
