@@ -189,27 +189,28 @@ def main() -> None:
         round(100.0 * (st1 - st0) / max(1, tot1 - tot0), 2) if tot1 > tot0 else None
     )
     total = round(sum(times.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "total_sec_headline_queries",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "sf": sf,
-                "estimator": f"min_of_{REPS}_reps",
-                "value_median": round(sum(medians.values()), 3),
-                "queries_median": medians,
-                "value_build_per_rep": round(sum(times_build.values()), 3),
-                "value_build_per_rep_median": round(
-                    sum(medians_build.values()), 3
-                ),
-                "queries_build_per_rep": times_build,
-                "steal_pct": steal_pct,
-            }
-        )
+    line = json.dumps(
+        {
+            "metric": "total_sec_headline_queries",
+            "value": total,
+            "unit": "sec",
+            "queries": times,
+            "sf": sf,
+            "estimator": f"min_of_{REPS}_reps",
+            "value_median": round(sum(medians.values()), 3),
+            "queries_median": medians,
+            "value_build_per_rep": round(sum(times_build.values()), 3),
+            "value_build_per_rep_median": round(
+                sum(medians_build.values()), 3
+            ),
+            "queries_build_per_rep": times_build,
+            "steal_pct": steal_pct,
+        }
     )
+    # printed (and flushed) after spark.stop(), so the context's shutdown
+    # log lines come before the one JSON line a reader takes as the last
     spark.stop()
+    print(line, flush=True)
 
 
 if __name__ == "__main__":

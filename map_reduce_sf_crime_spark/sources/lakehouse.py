@@ -30,12 +30,15 @@ reference's truncate-then-insert (K4), without its read-gap.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
-from functools import partial
+from contextlib import contextmanager, suppress
+from functools import partial, reduce
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from . import manifests
 
@@ -43,14 +46,36 @@ from . import manifests
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
 ) -> None:
-    """K3 at scale: columnar, partition-pruned, atomically replaced."""
+    """K3 at scale: columnar, partition-pruned, atomically replaced.
+
+    An overwrite then records the schema readers get (data columns,
+    then ``partition_cols``, all nullable) as ``_commits/_schema.json``,
+    which every reader reads with (:func:`_reader`, ``lakehouse_cdf``):
+    a partition column keeps its written type instead of the one Spark
+    guesses from its directory name. Merges and compactions keep the
+    record; another mode deletes it if the schema differs, and the
+    table reads by inference, like a plain ``df.write.partitionBy``."""
+    spark = df.sparkSession
+    fields = [f for f in df.schema if f.name not in partition_cols]
+    fields += [df.schema[c] for c in partition_cols]
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    ).jsonValue()
+    record = f"{path.rstrip('/')}/{_COMMITS_DIR}/{manifests.SCHEMA_FILE}"
+    recorded = None if mode == "overwrite" else _recorded_schema(spark, path)
+    if recorded not in (None, schema):
+        fs, jvm = _hfs(spark, record)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(record), False)
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    if mode == "overwrite":
+        _write_json(spark, record, schema)
 
 
 def read_partitioned(
     spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame:
-    """``merge_schema=True`` unions the footer schemas of every file
+    """Typed by the table's recorded schema (:func:`_reader`).
+    ``merge_schema=True`` instead unions the footer schemas of every file
     (Spark's ``mergeSchema``), the ALTER TABLE ADD COLUMN of a
     format-less lakehouse: batches appended with new nullable columns
     surface them table-wide, earlier files reading NULL. Additive
@@ -61,7 +86,7 @@ def read_partitioned(
     100 TB file counts, so hot paths pin their schema instead."""
     if merge_schema:
         return spark.read.option("mergeSchema", "true").parquet(path)
-    return spark.read.parquet(path)
+    return _reader(spark, path).parquet(path)
 
 
 # ---------------------------------------- commit manifest (crash consistency)
@@ -136,6 +161,43 @@ def _commit_log(
     return manifests.CommitLog(
         _hfs_ls(spark, path), read_json, path.rstrip("/"), strict
     )
+
+
+def _recorded_schema(spark: SparkSession, path: str) -> dict | None:
+    return manifests.recorded_schema(
+        _hfs_ls(spark, path), partial(_read_json, spark), path.rstrip("/")
+    )
+
+
+def _reader(
+    spark: SparkSession, path: str, log: manifests.CommitLog | None = None
+) -> DataFrameReader:
+    """``spark.read`` pinned to the schema :func:`write_partitioned`
+    recorded (``log`` serves it from its listing); plain ``spark.read``
+    for a table with no record."""
+    rec = _recorded_schema(spark, path) if log is None else log.schema
+    return spark.read.schema(StructType.fromJson(rec)) if rec else spark.read
+
+
+def _null_safe_eq(cols: list[str], left: str, right: str) -> Column | None:
+    """``left.c <=> right.c`` ANDed over ``cols`` (``None`` for none):
+    a NULL key or partition value matches its own NULL, where ``==``
+    is never true."""
+    eqs = [F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols]
+    return reduce(operator.and_, eqs) if eqs else None
+
+
+def _partition_pred(rows, partition_cols: list[str]) -> Column | None:
+    """Rows in any partition of ``rows`` (``None`` for none), matched
+    null-safe like :func:`_null_safe_eq`."""
+    clauses = [
+        reduce(
+            operator.and_,
+            [F.col(pc).eqNullSafe(F.lit(row[pc])) for pc in partition_cols],
+        )
+        for row in rows
+    ]
+    return reduce(operator.or_, clauses) if clauses else None
 
 
 def _spelled_keys(df: DataFrame, partition_cols: list[str]) -> list[tuple]:
@@ -361,6 +423,23 @@ def break_lease(spark: SparkSession, path: str) -> None:
     )
     if fs.exists(jp):
         fs.delete(jp, False)
+
+
+@contextmanager
+def _table_lease(spark: SparkSession, path: str, held: bool):
+    """The lease around a table-scoped rewrite (none unless ``held``),
+    released on success and on in-process failure, where a broken-lease
+    alarm must not mask the rewrite's own error."""
+    token = acquire_lease(spark, path) if held else None
+    try:
+        yield
+    except BaseException:
+        if token is not None:
+            with suppress(ConcurrentWriterError):
+                release_lease(spark, path, token)
+        raise
+    if token is not None:
+        release_lease(spark, path, token)
 
 
 def _active_intent_conflicts(
@@ -673,7 +752,7 @@ def read_as_of(spark: SparkSession, path: str, cid: int) -> DataFrame:
     log = _commit_log(spark, path)
     log.require_committed(cid, "read_as_of")
     subs = log.universe(len(log.meta[cid][0]["partition_cols"]))
-    out = _read_resolved(spark, log.resolve(cid, subs))
+    out = _read_resolved(spark, log, log.resolve(cid, subs))
     if out is None:
         raise ValueError(
             f"read_as_of: commit {cid} describes an empty table"
@@ -682,20 +761,23 @@ def read_as_of(spark: SparkSession, path: str, cid: int) -> DataFrame:
 
 
 def _read_resolved(
-    spark: SparkSession, resolved: dict[str, list[tuple[str, str]]]
+    spark: SparkSession,
+    log: manifests.CommitLog,
+    resolved: dict[str, list[tuple[str, str]]],
 ) -> DataFrame | None:
     """Read :meth:`manifests.CommitLog.resolve` output in one scan per
     ``basePath`` root, so hive partition columns resolve for live and
-    archived files alike; ``None`` when it names no file."""
+    archived files alike, typed by the table's record (:func:`_reader`);
+    ``None`` when it names no file."""
     groups: dict[str, list[str]] = {}
     for files in resolved.values():
         for base_root, f in files:
             groups.setdefault(base_root, []).append(f)
-    out = None
-    for base_root, files in groups.items():
-        df = spark.read.option("basePath", base_root).parquet(*files)
-        out = df if out is None else out.unionByName(df)
-    return out
+    dfs = [
+        _reader(spark, log.root, log).option("basePath", base).parquet(*files)
+        for base, files in groups.items()
+    ]
+    return reduce(DataFrame.unionByName, dfs) if dfs else None
 
 
 #: The public Delta-CDF change-type vocabulary read_changes emits —
@@ -749,15 +831,16 @@ def read_changes(
     touched = log.touched(from_cid, to_cid)
 
     def _empty() -> DataFrame:
-        schema = spark.read.parquet(path).schema.add(
-            "_change_type", "string", False
+        schema = StructType.fromJson(log.schema) if log.schema else (
+            spark.read.parquet(path).schema
         )
+        schema.add("_change_type", "string", False)
         return spark.createDataFrame([], schema)
 
     if not touched:
         return _empty()
     pre_df, post_df = (
-        _read_resolved(spark, log.resolve(cid, touched))
+        _read_resolved(spark, log, log.resolve(cid, touched))
         for cid in (from_cid, to_cid)
     )
     if pre_df is None and post_df is None:
@@ -770,10 +853,7 @@ def read_changes(
     cols = post_df.columns
     val_cols = [c for c in cols if c not in key_cols]
     pre, post = pre_df.alias("pre"), post_df.alias("post")
-    cond = None
-    for k in key_cols:
-        eq = F.col(f"pre.{k}").eqNullSafe(F.col(f"post.{k}"))
-        cond = eq if cond is None else cond & eq
+    cond = _null_safe_eq(key_cols, "pre", "post")
     # presence is detectable without flag columns only if some column
     # is non-null; a literal marker is unconditionally sound
     joined = (
@@ -785,10 +865,7 @@ def read_changes(
             how="full_outer",
         )
     )
-    same = None
-    for c in val_cols:
-        eq = F.col(f"pre.{c}").eqNullSafe(F.col(f"post.{c}"))
-        same = eq if same is None else same & eq
+    same = _null_safe_eq(val_cols, "pre", "post")
     if same is None:  # key-only table: matched rows are identical
         same = F.lit(True)
 
@@ -926,21 +1003,11 @@ def merge_upsert(
     # evidence, and an immediate re-run is the documented recovery;
     # only a hard crash leaves the lease, where the TTL protects the
     # torn table until the writer is provably dead.
-    token = acquire_lease(spark, path) if manifest else None
-    ok = False
-    try:
+    with _table_lease(spark, path, manifest):
         _merge_upsert_locked(
             spark, path, changes, key_cols, partition_cols, delete_col,
             manifest, archive,
         )
-        ok = True
-    finally:
-        if token is not None:
-            try:
-                release_lease(spark, path, token)
-            except ConcurrentWriterError:
-                if ok:  # broken-lease alarm must not mask the real error
-                    raise
 
 
 def _merge_upsert_partition_scoped(
@@ -1100,17 +1167,9 @@ def _merge_upsert_locked(
                 f"intent(s) {sorted(c for c, _ in conflicts)} on "
                 f"{path}; refusing to interleave"
             )
-    current = spark.read.parquet(path)
+    current = _reader(spark, path).parquet(path)
     part_keys = changes.select(*partition_cols).distinct().collect()
-    pred = None
-    for row in part_keys:
-        clause = None
-        for pc in partition_cols:
-            # null-safe: a NULL partition value must still match its
-            # own partition (plain == is never true for NULL)
-            c = F.col(pc).eqNullSafe(F.lit(row[pc]))
-            clause = c if clause is None else (clause & c)
-        pred = clause if pred is None else (pred | clause)
+    pred = _partition_pred(part_keys, partition_cols)
     touched = current.filter(pred) if pred is not None else current.limit(0)
     if delete_col is not None:
         # NULL flag = upsert: a bare filter(~flag) would drop the row
@@ -1125,12 +1184,8 @@ def _merge_upsert_locked(
     # null-safe anti-join on the key: NULL-valued key columns must
     # match their own key (as the partition predicate above already does)
     t, ck = touched.alias("t"), change_keys.alias("ck")
-    cond = None
-    for kc in key_cols:
-        c = F.col(f"t.{kc}").eqNullSafe(F.col(f"ck.{kc}"))
-        cond = c if cond is None else (cond & c)
     merged = (
-        t.join(ck, cond, "left_anti")
+        t.join(ck, _null_safe_eq(key_cols, "t", "ck"), "left_anti")
         .unionByName(upserts)
         .localCheckpoint()
     )
@@ -1248,22 +1303,11 @@ def compact_partitioned(
     # the checkpointed rewrite must observe a table no other writer
     # mutates in between (a compaction interleaving with a merge is
     # the same hazard)
-    token = acquire_lease(spark, path) if manifest else None
-    ok = False
-    try:
-        out = _compact_partitioned_locked(
+    with _table_lease(spark, path, manifest):
+        return _compact_partitioned_locked(
             spark, path, partition_cols, target_rows_per_file,
             max_files_per_partition, manifest,
         )
-        ok = True
-        return out
-    finally:
-        if token is not None:
-            try:
-                release_lease(spark, path, token)
-            except ConcurrentWriterError:
-                if ok:
-                    raise
 
 
 def _compact_partitioned_locked(
@@ -1274,7 +1318,7 @@ def _compact_partitioned_locked(
     max_files_per_partition: int,
     manifest: bool,
 ) -> list[tuple]:
-    current = spark.read.parquet(path)
+    current = _reader(spark, path).parquet(path)
     counts = (
         current.withColumn("_f", F.input_file_name())
         .groupBy(*partition_cols)
@@ -1306,17 +1350,15 @@ def _compact_partitioned_locked(
     )
     if not counts:
         return []
+    skeys = [tuple(row[f"_s_{pc}"] for pc in partition_cols) for row in counts]
     if manifest:
         # conflict-check BEFORE the snapshot materializes below (the
         # same ordering rule as merge_upsert): a partition-scoped
         # writer that commits after our data is read would otherwise
         # look finished to a later check while we overwrite its rows
         # from stale bytes
-        skeys_pre = [
-            tuple(row[f"_s_{pc}"] for pc in partition_cols) for row in counts
-        ]
         subpaths = [
-            _partition_subpath(spark, partition_cols, k) for k in skeys_pre
+            _partition_subpath(spark, partition_cols, k) for k in skeys
         ]
         conflicts = _active_intent_conflicts(spark, path, subpaths)
         if conflicts:
@@ -1325,15 +1367,7 @@ def _compact_partitioned_locked(
                 f"intent(s) {sorted(c for c, _ in conflicts)} on "
                 f"{path}; refusing to compact over them"
             )
-    pred = None
-    for row in counts:
-        clause = None
-        for pc in partition_cols:
-            # null-safe: a NULL partition value must still match its
-            # own partition (plain == is never true for NULL)
-            c = F.col(pc).eqNullSafe(F.lit(row[pc]))
-            clause = c if clause is None else (clause & c)
-        pred = clause if pred is None else (pred | clause)
+    pred = _partition_pred(counts, partition_cols)
     kdf = spark.createDataFrame(
         [
             tuple(row[pc] for pc in partition_cols)
@@ -1346,10 +1380,7 @@ def _compact_partitioned_locked(
     # null-safe join back of the salt modulus: a plain equi-join would
     # silently drop the NULL partition's rows
     t, kk = current.filter(pred).alias("t"), F.broadcast(kdf.alias("k"))
-    cond = None
-    for pc in partition_cols:
-        c = F.col(f"t.{pc}").eqNullSafe(F.col(f"k.{pc}"))
-        cond = c if cond is None else (cond & c)
+    cond = _null_safe_eq(partition_cols, "t", "k")
     # salt = hash of the data columns MIXED with a per-row id: a hash
     # of values alone is a pure function of row CONTENT, so a
     # duplicate-heavy partition (or a table with only partition
@@ -1379,14 +1410,7 @@ def _compact_partitioned_locked(
         .localCheckpoint()
     )
     keys = [tuple(row[pc] for pc in partition_cols) for row in counts]
-    skeys = [
-        tuple(row[f"_s_{pc}"] for pc in partition_cols) for row in counts
-    ]
-    cid = (
-        begin_commit(spark, path, partition_cols, skeys)
-        if manifest
-        else None
-    )
+    cid = begin_commit(spark, path, partition_cols, skeys) if manifest else None
     (
         touched.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

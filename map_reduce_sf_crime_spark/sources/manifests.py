@@ -5,11 +5,13 @@ intent.json`` (before it: format stamp, partition columns, keys, the
 ``pre`` inventory ``{subpath: [[file_name, length], ...]}``) and
 ``{id:06d}.commit.json`` (after it: the ``post`` inventory);
 ``merge_upsert(archive=True)`` copies the replaced files under
-``{id:06d}.archive/{subpath}/``. The batch readers (``read_as_of``,
-``read_changes``, ``table_state``, ``vacuum_commits``) fold this log on
-the driver through the Hadoop FileSystem API; the ``lakehouse_cdf``
-stream plans in Python workers with no SparkSession and goes through
-``os``. Both fold it here, stdlib only, given two callables:
+``{id:06d}.archive/{subpath}/``; ``write_partitioned`` records the
+table's schema as ``_schema.json`` (:func:`recorded_schema`). The
+batch readers (``read_as_of``, ``read_changes``, ``table_state``,
+``vacuum_commits``) fold this log on the driver through the Hadoop
+FileSystem API; the ``lakehouse_cdf`` stream plans in Python workers
+with no SparkSession and goes through ``os``. Both fold it here,
+stdlib only, given two callables:
 
 - ``ls(dir) -> {name: length}``: a file's byte length, ``None`` for a
   subdirectory; ``{}`` when ``dir`` is absent;
@@ -21,9 +23,11 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from functools import cached_property
 
 COMMITS_DIR = "_commits"
 ARCHIVE_SUFFIX = ".archive"
+SCHEMA_FILE = "_schema.json"
 #: Manifest schema version (2 = table-root-relative inventory keys,
 #: version-stamped). Manifests WITHOUT the stamp predate it and the
 #: key spelling is unverifiable, so strict readers (table_state /
@@ -65,6 +69,20 @@ def commit_ids(listing) -> list[int]:
     )
 
 
+def recorded_schema(
+    ls: Ls, read_json: Callable, root: str, listing: dict | None = None
+) -> dict | None:
+    """The table's recorded schema, Spark's ``StructType.jsonValue()``
+    of the columns as a reader sees them (data columns, then partition
+    columns); ``None`` when none is recorded. ``listing`` is the
+    ``_commits`` listing when the caller already has it. A torn record
+    raises ``read_json``'s ``ValueError``."""
+    cdir = f"{root}/{COMMITS_DIR}"
+    if SCHEMA_FILE not in (ls(cdir) if listing is None else listing):
+        return None
+    return read_json(f"{cdir}/{SCHEMA_FILE}")
+
+
 class CommitLog:
     """A table's manifest pairs, loaded once: ``ids`` (every intent),
     ``meta`` (``{id: (intent, post | None)}``) and ``legacy``.
@@ -79,9 +97,9 @@ class CommitLog:
     def __init__(
         self, ls: Ls, read_json: Callable, root: str, strict: bool = True
     ):
-        self.ls, self.root = ls, root
+        self.ls, self.read_json, self.root = ls, read_json, root
         cdir = f"{root}/{COMMITS_DIR}"
-        names = ls(cdir)
+        self.names = names = ls(cdir)
         self.ids = commit_ids(names)
         self.meta: dict[int, tuple] = {}
         self.legacy: set[int] = set()
@@ -117,6 +135,12 @@ class CommitLog:
                 except (ValueError, KeyError, TypeError):
                     post = None
             self.meta[cid] = (intent, post)
+
+    @cached_property
+    def schema(self) -> dict | None:
+        """:func:`recorded_schema`, served from the ``_commits`` listing
+        already taken."""
+        return recorded_schema(self.ls, self.read_json, self.root, self.names)
 
     def committed(self) -> list[int]:
         return [i for i, (_intent, post) in self.meta.items() if post is not None]

@@ -41,20 +41,28 @@ fsspec-backed ``ls``/``read_json`` callables instead. Only the diff
 differs from ``read_changes``: a Spark full-outer join there, a
 per-partition pandas merge here; tests/test_streaming.py compares
 every micro-batch against ``read_changes`` on the same commits.
+
+Column types are the schema ``write_partitioned`` recorded with the
+table (``manifests.recorded_schema``), the record the batch readers
+read with too: partition values arrive as directory-name strings and
+are cast to their recorded types (``_cast_part_value``). A table with
+no record (say, one written by a plain ``df.write.partitionBy``) is
+refused by ``schema()`` with a ``ValueError`` naming its path.
 """
 
 from __future__ import annotations
 
 import datetime
 import decimal
-import re
 from typing import Iterator, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.types import StructType
 
 from ..sources import manifests
 
@@ -76,8 +84,6 @@ def _paths(resolved: dict, sub: str) -> list[str]:
 
 def _parse_subpath(sub: str, part_cols: list[str]) -> dict[str, str | None]:
     vals: dict[str, str | None] = {}
-    from urllib.parse import unquote
-
     for seg in sub.split("/"):
         if "=" not in seg:
             continue
@@ -86,112 +92,29 @@ def _parse_subpath(sub: str, part_cols: list[str]) -> dict[str, str | None]:
     return {c: vals.get(c) for c in part_cols}
 
 
-_INT_RE = re.compile(r"[+-]?\d+")
-#: what Java's Double.parseDouble reads, short of hex and type suffixes
-_DOUBLE_RE = re.compile(r"[+-]?((\d+\.?\d*|\.\d+)([eE][+-]?\d+)?|NaN|Infinity)")
-_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
-#: Spark's partition timestamp pattern ``yyyy-MM-dd HH:mm:ss[.S]``
-#: takes at most ONE fractional digit; longer fractions type as string
-_TIMESTAMP_RE = re.compile(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}(\.\d)?")
-
-
-def _value_type(v: str) -> str:
-    """Spark's type for one hive partition value: the first of int,
-    bigint, decimal, double, timestamp, date that parses it, else
-    string. Spark types a number with no fractional digits past
-    bigint (``1e5``, 20 digits) as decimal, which this source does
-    not carry: such a value raises."""
-    if _INT_RE.fullmatch(v):
-        n = int(v)
-        if -(2**31) <= n < 2**31:
-            return "int"
-        if -(2**63) <= n < 2**63:
-            return "bigint"
-    if _DOUBLE_RE.fullmatch(v):
-        finite = v.lstrip("+-") not in ("NaN", "Infinity")
-        if finite and decimal.Decimal(v).as_tuple().exponent >= 0:
-            raise ValueError(
-                f"lakehouse_cdf: partition value {v!r} is a decimal to "
-                "Spark; decimal partition columns are not supported"
-            )
-        return "double"
-    for ddl, pattern in (("timestamp", _TIMESTAMP_RE), ("date", _DATE_RE)):
-        if pattern.fullmatch(v):
-            try:
-                _cast_part_value(v, ddl)
-                return ddl
-            except ValueError:  # e.g. month 13
-                pass
-    return "string"
-
-
-def _infer_part_type(values: list[str | None]) -> str:
-    """Spark's hive partition column typing: the widest of the
-    values' types, with Spark's partition widening (bigint and double,
-    or a number and a date, have no common type but string); nulls
-    are ignored and an all-null column is string."""
-    kinds = {_value_type(v) for v in values if v is not None}
-    if len(kinds) == 1:
-        return kinds.pop()
-    for wider, family in (
-        ("bigint", {"int", "bigint"}),
-        ("double", {"int", "double"}),
-        ("timestamp", {"date", "timestamp"}),
-    ):
-        if kinds and kinds <= family:
-            return wider
-    return "string"
-
-
 def _cast_part_value(v: str | None, ddl: str):
     """A hive partition value as ``ddl``'s Python type. Timestamps are
     wall-clock strings in the writing session's time zone, which
     ``session.get_spark`` pins to UTC."""
     if v is None:
         return None
-    if ddl == "int" or ddl == "bigint":
+    if ddl in ("tinyint", "smallint", "int", "bigint"):
         return int(v)
-    if ddl == "double":
+    if ddl in ("float", "double"):
         return float(v)
+    if ddl.startswith("decimal"):
+        return decimal.Decimal(v)
+    if ddl == "boolean":
+        return v == "true"
     if ddl == "date":
         return datetime.date.fromisoformat(v)
     if ddl == "timestamp":
         return datetime.datetime.fromisoformat(v).replace(
             tzinfo=datetime.timezone.utc
         )
+    if ddl == "timestamp_ntz":
+        return datetime.datetime.fromisoformat(v)
     return v
-
-
-_ARROW_DDL = {
-    "bool": "boolean",
-    "int8": "tinyint",
-    "int16": "smallint",
-    "int32": "int",
-    "int64": "bigint",
-    "float": "float",
-    "halffloat": "float",
-    "double": "double",
-    "string": "string",
-    "large_string": "string",
-    "binary": "binary",
-    "large_binary": "binary",
-    "date32[day]": "date",
-}
-
-
-def _arrow_ddl(t) -> str:
-    import pyarrow as pa
-
-    s = str(t)
-    if s in _ARROW_DDL:
-        return _ARROW_DDL[s]
-    if isinstance(t, pa.TimestampType):
-        return "timestamp"
-    if isinstance(t, pa.Decimal128Type):
-        return f"decimal({t.precision},{t.scale})"
-    if isinstance(t, (pa.ListType, pa.LargeListType)):
-        return f"array<{_arrow_ddl(t.value_type)}>"
-    raise ValueError(f"lakehouse_cdf: unsupported parquet column type {t}")
 
 
 # ---------------------------------------------------------------------------
@@ -236,48 +159,19 @@ class LakehouseChangeFeed(DataSource):
             raise ValueError("lakehouse_cdf: option 'path' is required")
         return path.rstrip("/").removeprefix("file:")
 
-    def _plan_schema(self):
-        """(data_cols [(name, ddl)], part_cols [(name, ddl)]) from the
-        latest committed snapshot's parquet footers + directory
-        names."""
-        import pyarrow.parquet as pq
-
+    def schema(self) -> StructType:
+        """The schema ``write_partitioned`` recorded (the columns as
+        ``read_changes`` emits them) plus ``_change_type``."""
         root = self._root()
-        log = _log(root)
-        committed = log.committed()
-        if not committed:
+        rec = manifests.recorded_schema(
+            manifests.local_ls, manifests.local_read_json, root
+        )
+        if rec is None:
             raise ValueError(
-                f"lakehouse_cdf: no committed manifests at {root} — the "
-                "feed needs at least the first committed merge"
+                f"lakehouse_cdf: {root} has no recorded schema; rewrite it "
+                "once with sources.lakehouse.write_partitioned to record one"
             )
-        latest = committed[-1]
-        part_cols = log.meta[latest][0]["partition_cols"]
-        # the partition universe read_as_of resolves, so the column
-        # types match what Spark infers over the same directories
-        groups = log.resolve(latest, log.universe(len(part_cols)))
-        sample = next((_paths(groups, sub)[0] for sub in groups), None)
-        if sample is None:
-            raise ValueError(
-                f"lakehouse_cdf: commit {latest} describes an empty table"
-            )
-        schema = pq.read_schema(sample)
-        data_cols = [
-            (f.name, _arrow_ddl(f.type))
-            for f in schema
-            if f.name not in part_cols
-        ]
-        pvals: dict[str, list] = {c: [] for c in part_cols}
-        for sub in groups:
-            parsed = _parse_subpath(sub, part_cols)
-            for c in part_cols:
-                pvals[c].append(parsed[c])
-        pddl = [(c, _infer_part_type(pvals[c])) for c in part_cols]
-        return data_cols, pddl
-
-    def schema(self) -> str:
-        data_cols, pddl = self._plan_schema()
-        cols = data_cols + pddl + [(_CHANGE_COL, "string")]
-        return ", ".join(f"`{n}` {t}" for n, t in cols)
+        return StructType.fromJson(rec).add(_CHANGE_COL, "string")
 
     def streamReader(self, schema) -> "_CDFStreamReader":
         key_cols = [
@@ -316,8 +210,13 @@ class _CDFStreamReader(DataSourceStreamReader):
         if starting_cid is not None:
             log.require_committed(starting_cid, "lakehouse_cdf startingCid")
             self._start = starting_cid
-        else:
+        elif log.committed():
             self._start = log.committed()[-1]
+        else:
+            raise ValueError(
+                f"lakehouse_cdf: no committed manifests at {root} — the "
+                "feed needs at least the first committed merge"
+            )
         # progress watermark for the admission cap; checkpointed starts
         # re-sync it at partitions() time, so the cap is best-effort
         # for the first post-restart batch only
@@ -383,11 +282,8 @@ class _CDFStreamReader(DataSourceStreamReader):
             if c != _CHANGE_COL and c not in spec["part_vals"]
         ]
         pvals = tuple(
-            _cast_part_value(
-                spec["part_vals"][c], self._part_types[c]
-            )
-            for c in self._fields
-            if c in spec["part_vals"]
+            _cast_part_value(v, self._part_types[c])
+            for c, v in spec["part_vals"].items()
         )
 
         def _load(files) -> pd.DataFrame:
@@ -406,10 +302,6 @@ class _CDFStreamReader(DataSourceStreamReader):
             if isinstance(v, pd.Timestamp):
                 return None if pd.isna(v) else v.to_pydatetime()
             return v
-
-        def _eq(x, y) -> bool:
-            x, y = _py(x), _py(y)
-            return x == y or (x is None and y is None)
 
         pre, post = _load(spec["pre"]), _load(spec["post"])
         keys = self._key_cols
@@ -451,7 +343,7 @@ class _CDFStreamReader(DataSourceStreamReader):
             elif which == "right_only":
                 yield _emit([r[f"b.{c}"] for c in data_cols], "insert")
             else:
-                if all(_eq(r[f"a.{c}"], r[f"b.{c}"]) for c in val_cols):
+                if all(_py(r[f"a.{c}"]) == _py(r[f"b.{c}"]) for c in val_cols):
                     continue
                 yield _emit(
                     [r[f"a.{c}"] for c in data_cols], "update_preimage"

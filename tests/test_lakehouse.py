@@ -367,6 +367,30 @@ def test_schema_evolution_merge(spark):
     assert "qty" in str(ei.value) or "merge" in str(ei.value).lower()
 
 
+def test_append_keeps_matching_schema_record_drops_differing(spark, tmp_path):
+    """write_partitioned records the table's schema; an append with
+    the same schema keeps the record, one with another schema deletes
+    it, and the table then reads by Spark's inference (the decimal
+    partition column as double)."""
+    path = str(tmp_path / "recorded")
+    record = os.path.join(path, "_commits", "_schema.json")
+    v1 = spark.createDataFrame(
+        [(1, "a")], "id long, tag string"
+    ).withColumn("p", F.expr("cast(1.5 as decimal(10,2))"))
+    write_partitioned(v1, path, ["p"])
+    assert read_partitioned(spark, path).dtypes == [
+        ("id", "bigint"), ("tag", "string"), ("p", "decimal(10,2)")
+    ]
+    write_partitioned(v1.withColumn("id", F.lit(2).cast("long")), path, ["p"],
+                      mode="append")
+    assert os.path.exists(record)
+    assert sorted(r["id"] for r in read_partitioned(spark, path).collect()) == [1, 2]
+    write_partitioned(v1.withColumn("score", F.lit(0.5)), path, ["p"],
+                      mode="append")
+    assert not os.path.exists(record)
+    assert dict(read_partitioned(spark, path).dtypes)["p"] == "double"
+
+
 def test_compact_handles_null_partition(spark):
     """Rows in the NULL partition (__HIVE_DEFAULT_PARTITION__) are
     compacted too, not silently dropped or skipped — partition
@@ -547,8 +571,12 @@ def test_vacuum_commits_keeps_latest(spark):
     commits = os.path.join(path, "_commits")
 
     def manifest_files():
-        # the Hadoop local FS adds .crc sidecars; count the manifests
-        return [f for f in os.listdir(commits) if f.endswith(".json")]
+        # the Hadoop local FS adds .crc sidecars, and _schema.json is the
+        # table's schema record; count the manifests
+        return [
+            f for f in os.listdir(commits)
+            if f.endswith((".intent.json", ".commit.json"))
+        ]
 
     assert len(manifest_files()) == 10  # 5 intents + 5 commits
     dropped = vacuum_commits(spark, path, keep_last=2)
@@ -559,6 +587,7 @@ def test_vacuum_commits_keeps_latest(spark):
     vacuum_commits(spark, path, keep_last=0)
     assert len(manifest_files()) == 2
     assert table_state(spark, path)["status"] == "clean"
+    assert os.path.exists(os.path.join(commits, "_schema.json"))
 
 
 def test_torn_intent_not_masked_by_later_commit(spark):

@@ -160,3 +160,30 @@ def test_commit_ids_and_inventory(rewritten):
     assert manifests.inventory(local_ls(str(rewritten / "pt=1"))) == [
         ["c.parquet", 2]
     ]
+
+
+def test_recorded_schema_missing_is_none_torn_raises(tmp_path):
+    """The record ``write_partitioned`` leaves in ``_commits``: absent
+    reads as ``None``, present as the parsed schema (through
+    :func:`recorded_schema` and ``CommitLog.schema`` alike, and never
+    as a commit id), torn raises."""
+    root = tmp_path / "t"
+    assert manifests.recorded_schema(local_ls, local_read_json, str(root)) is None
+    _manifest(root, 0, {"pt=0": []}, {"pt=0": []})
+    assert _log(root).schema is None
+    schema = {
+        "type": "struct",
+        "fields": [
+            {"name": "pt", "type": "decimal(10,2)", "nullable": True, "metadata": {}}
+        ],
+    }
+    rec = root / manifests.COMMITS_DIR / manifests.SCHEMA_FILE
+    _put(rec, json.dumps(schema).encode())
+    log = _log(root)
+    assert log.ids == [0] and log.schema == schema
+    assert manifests.recorded_schema(local_ls, local_read_json, str(root)) == schema
+    _put(rec, json.dumps(schema).encode()[:20])
+    with pytest.raises(ValueError):
+        manifests.recorded_schema(local_ls, local_read_json, str(root))
+    with pytest.raises(ValueError):
+        _log(root).schema

@@ -630,8 +630,6 @@ def test_cdf_capped_offset_skips_torn_commit_ids(spark, tmp_path):
     admission cap must pick batch endpoints by walking the COMMITTED
     id list — id arithmetic would land an offset on the torn id and
     diff against a half-overwritten state the batch reader refuses."""
-    from pyspark.sql.types import _parse_datatype_string
-
     from map_reduce_sf_crime_spark.sources.lakehouse import (
         begin_commit,
         merge_upsert,
@@ -659,8 +657,7 @@ def test_cdf_capped_offset_skips_torn_commit_ids(spark, tmp_path):
                  churn.withColumn("v", F.lit(2)).localCheckpoint(),
                  key_cols=["id"], partition_cols=["pt"], archive=True)
 
-    ds = LakehouseChangeFeed({"path": path, "keycols": "id"})
-    schema = _parse_datatype_string(ds.schema())
+    schema = LakehouseChangeFeed({"path": path, "keycols": "id"}).schema()
     r = _CDFStreamReader(path, ["id"], schema, starting_cid=0, max_commits=1)
     # one-committed-id step from 0 must be 2 (skipping torn id 1)
     assert r.latestOffset() == {"cid": 2}
@@ -668,17 +665,48 @@ def test_cdf_capped_offset_skips_torn_commit_ids(spark, tmp_path):
     assert r.latestOffset() == {"cid": 2}  # nothing further
 
 
-@pytest.mark.parametrize("ptype", ["date", "timestamp"])
-def test_cdf_types_date_partitions_like_read_changes(spark, tmp_path, ptype):
-    """Hive partition values that Spark infers as date or timestamp
-    get the same type in the lakehouse_cdf schema as in read_changes
-    over the same table, and a date partition's values read back as
-    the dates read_changes emits."""
-    from pyspark.sql.types import _parse_datatype_string
+_DAYS = "make_interval(0, 0, 0, {k})"
 
+
+@pytest.mark.parametrize(
+    "ptype,value",
+    [
+        pytest.param(
+            "date", "timestamp'2024-01-01 06:30:00' + " + _DAYS, id="date"
+        ),
+        pytest.param(
+            "timestamp",
+            "timestamp'2024-01-01 06:30:00' + " + _DAYS,
+            id="timestamp",
+        ),
+        # two fractional digits: past Spark's partition inference
+        # pattern, which types the column as string
+        pytest.param(
+            "timestamp",
+            "timestamp'2024-01-01 06:30:00.25' + " + _DAYS,
+            id="timestamp_frac2",
+        ),
+        pytest.param(
+            "timestamp",
+            "timestamp'1969-12-31 23:59:59.5' - " + _DAYS,
+            id="timestamp_pre_epoch",
+        ),
+        # inference types it double
+        pytest.param("decimal(10,2)", "12.34 + {k}", id="decimal"),
+    ],
+)
+def test_cdf_types_date_partitions_like_read_changes(
+    spark, tmp_path, ptype, value
+):
+    """A partition column reads back with the type it was written with
+    in read_partitioned, read_as_of, read_changes and the lakehouse_cdf
+    schema, and the stream's rows are read_changes' rows. ``value`` is
+    the partition value of row ``id``, with ``k = id % 3``."""
     from map_reduce_sf_crime_spark.sources.lakehouse import (
         merge_upsert,
+        read_as_of,
         read_changes,
+        read_partitioned,
         write_partitioned,
     )
     from map_reduce_sf_crime_spark.streaming.cdf_source import (
@@ -686,16 +714,11 @@ def test_cdf_types_date_partitions_like_read_changes(spark, tmp_path, ptype):
         _CDFStreamReader,
     )
 
-    path = str(tmp_path / f"{ptype}_fact")
+    path = str(tmp_path / "fact")
     base = spark.range(6).select(
         F.col("id"),
         (F.col("id") * 10).alias("v"),
-        F.expr(
-            "timestamp'2024-01-01 06:30:00'"
-            " + make_interval(0, 0, 0, cast(id % 3 as int))"
-        )
-        .cast(ptype)
-        .alias("d"),
+        F.expr(value.format(k="cast(id % 3 as int)")).cast(ptype).alias("d"),
     )
     write_partitioned(base, path, ["d"])
     merge_upsert(spark, path, base.filter("id < 2").localCheckpoint(),
@@ -705,15 +728,62 @@ def test_cdf_types_date_partitions_like_read_changes(spark, tmp_path, ptype):
                  key_cols=["id"], partition_cols=["d"], archive=True)  # c1
 
     want = read_changes(spark, path, 0, 1, ["id"])
-    assert f"d:{ptype}" in want.schema.simpleString()
-    schema = _parse_datatype_string(
-        LakehouseChangeFeed({"path": path, "keyCols": "id"}).schema()
-    )
+    schema = LakehouseChangeFeed({"path": path, "keyCols": "id"}).schema()
+    for got in (read_partitioned(spark, path), read_as_of(spark, path, 0), want):
+        assert got.schema["d"].dataType.simpleString() == ptype
+    assert schema["d"].dataType.simpleString() == ptype
     assert schema.simpleString() == want.schema.simpleString()
-    if ptype == "date":
-        r = _CDFStreamReader(path, ["id"], schema, starting_cid=0)
-        got = [row for p in r.partitions({"cid": 0}, {"cid": 1}) for row in r.read(p)]
-        assert sorted(got) == sorted(tuple(row) for row in want.collect())
+    r = _CDFStreamReader(path, ["id"], schema, starting_cid=0)
+    got = [row for p in r.partitions({"cid": 0}, {"cid": 1}) for row in r.read(p)]
+    assert len(got) == 6  # ids 0, 2, 4: pre- and post-image each
+    # through Spark's Python → internal conversion, as the stream's rows go
+    assert sorted(map(tuple, spark.createDataFrame(got, schema).collect())) == (
+        sorted(map(tuple, want.collect()))
+    )
+    assert sorted(map(tuple, read_as_of(spark, path, 1).collect())) == sorted(
+        map(tuple, read_partitioned(spark, path).collect())
+    )
+
+
+def test_unrecorded_table_reads_by_inference_and_feed_refuses(spark, tmp_path):
+    """A table written by a plain ``df.write.partitionBy`` has no
+    recorded schema: merged, it reads in every batch reader with the
+    types Spark infers from its directories, and lakehouse_cdf refuses
+    it with a ValueError naming its path."""
+    from map_reduce_sf_crime_spark.sources.lakehouse import (
+        merge_upsert,
+        read_as_of,
+        read_changes,
+        read_partitioned,
+    )
+    from map_reduce_sf_crime_spark.streaming.cdf_source import (
+        LakehouseChangeFeed,
+    )
+
+    path = str(tmp_path / "plain_fact")
+    base = spark.range(4).select(
+        F.col("id"),
+        F.lit(1).alias("v"),
+        F.expr("timestamp'2024-01-01 06:30:00.25' + (id % 2) * interval 1 day")
+        .alias("d"),
+        F.expr("cast(12.34 + id % 2 as decimal(10,2))").alias("p"),
+    )
+    base.write.partitionBy("d", "p").parquet(path)
+    inferred = spark.read.parquet(path).schema.simpleString()
+    assert "d:string" in inferred and "p:double" in inferred
+    row0 = read_partitioned(spark, path).filter("id = 0").localCheckpoint()
+    for v in (2, 3):  # c0, c1
+        merge_upsert(spark, path, row0.withColumn("v", F.lit(v)),
+                     key_cols=["id"], partition_cols=["d", "p"], archive=True)
+    feed = read_changes(spark, path, 0, 1, ["id"])
+    for df in (read_partitioned(spark, path), read_as_of(spark, path, 1)):
+        assert df.schema.simpleString() == inferred
+        assert sorted(r["v"] for r in df.collect()) == [1, 1, 1, 3]
+    assert feed.drop("_change_type").schema.simpleString() == inferred
+    assert sorted(r["v"] for r in feed.collect()) == [2, 3]
+    with pytest.raises(ValueError, match="no recorded schema") as ei:
+        LakehouseChangeFeed({"path": path, "keyCols": "id"}).schema()
+    assert path in str(ei.value)
 
 
 @pytest.mark.slow
