@@ -541,41 +541,6 @@ def k_anonymity_flags(
     return joined.select(*out)
 
 
-def k_anonymity_summary(
-    df: DataFrame,
-    quasi_cols: list[str],
-    k: int = 5,
-    sensitive_col: str | None = None,
-) -> DataFrame:
-    """Corpus-level privacy posture, one row:
-    ``(k, n_rows, n_classes, n_small_classes, n_rows_at_risk,
-    min_class_size[, min_l_div])`` — ``n_rows_at_risk`` is the
-    suppression cost of enforcing k-anonymity by dropping risky rows;
-    ``min_class_size`` is the k the corpus ACTUALLY satisfies."""
-    if not quasi_cols:
-        raise ValueError("quasi_cols must name at least one column")
-    aggs = [F.count(F.lit(1)).alias("class_size")]
-    if sensitive_col is not None:
-        aggs.append(
-            F.countDistinct(F.col(sensitive_col)).alias("class_l_div")
-        )
-    classes = df.groupBy(*quasi_cols).agg(*aggs)
-    small = F.col("class_size") < k
-    outer = [
-        F.lit(k).cast("int").alias("k"),
-        F.sum("class_size").cast("long").alias("n_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.sum(small.cast("long")).cast("long").alias("n_small_classes"),
-        F.sum(F.when(small, F.col("class_size")).otherwise(0))
-        .cast("long")
-        .alias("n_rows_at_risk"),
-        F.min("class_size").cast("long").alias("min_class_size"),
-    ]
-    if sensitive_col is not None:
-        outer.append(F.min("class_l_div").cast("long").alias("min_l_div"))
-    return classes.agg(*outer)
-
-
 def k_anonymity_flags_sql(
     quasi_cols: list[str],
     k: int = 5,
@@ -604,39 +569,4 @@ def k_anonymity_flags_sql(
            cast(case when c.class_size < {k} then 1 else 0 end as int)
              as at_risk
     from {table} r join _classes c on {cond}
-    """
-
-
-def k_anonymity_summary_sql(
-    quasi_cols: list[str],
-    k: int = 5,
-    sensitive_col: str | None = None,
-    table: str = "documents",
-) -> str:
-    """DuckDB twin of :func:`k_anonymity_summary`."""
-    qcols = ", ".join(quasi_cols)
-    ldiv = (
-        f", count(distinct {sensitive_col}) as class_l_div"
-        if sensitive_col
-        else ""
-    )
-    ldiv_out = (
-        ", cast(min(class_l_div) as bigint) as min_l_div"
-        if sensitive_col
-        else ""
-    )
-    return f"""
-    with _classes as (
-      select {qcols}, count(*) as class_size{ldiv}
-      from {table} group by {qcols}
-    )
-    select cast({k} as int) as k,
-           cast(sum(class_size) as bigint) as n_rows,
-           cast(count(*) as bigint) as n_classes,
-           cast(sum(case when class_size < {k} then 1 else 0 end) as bigint)
-             as n_small_classes,
-           cast(sum(case when class_size < {k} then class_size else 0 end)
-                as bigint) as n_rows_at_risk,
-           cast(min(class_size) as bigint) as min_class_size{ldiv_out}
-    from _classes
     """

@@ -52,27 +52,6 @@ PRUNE_EPS = 1e-9
 
 # ---------------------------------------------------------------- exact
 
-def exact_dedup_stats(docs: DataFrame) -> DataFrame:
-    """Per-source corpus stats after exact (md5) dedup."""
-    return (
-        docs.select("source", F.md5("text").alias("h"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("h").alias("n_unique"),
-        )
-        .withColumn("n_dupes", F.col("n_docs") - F.col("n_unique"))
-    )
-
-
-EXACT_DEDUP_SQL = """
-select source, count(*) as n_docs, count(distinct md5(text)) as n_unique,
-       count(*) - count(distinct md5(text)) as n_dupes
-from documents
-group by source
-"""
-
-
 def dedup_keep_first(docs: DataFrame, key: str = "text") -> DataFrame:
     """Exact dedup keeping the lowest doc_id per duplicate group —
     the "canonical representative" form (min-agg + semi-join keeps
@@ -1032,76 +1011,6 @@ def simhash_near_pairs_sql(max_hamming: int = 3) -> str:
     from s a join s b on a.doc_id < b.doc_id
     where bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
     """
-
-
-def hamming_near_pairs(
-    hashes: DataFrame,
-    hash_col: str,
-    bits: int = 64,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Generic banded Hamming-ball self-join over any precomputed
-    fixed-width hash column — the blocking scheme :func:`simhash_near_pairs`
-    uses for text, factored so OTHER fingerprint families (the
-    multimodal dHash in operators/multimodal.py, or any future
-    audio/embedding bit-signature) get the same provably-exact
-    candidate generation without reimplementing it.
-
-    ``(doc_id, hash_col)`` in → ``(doc_a, doc_b, hamming)`` out, with
-    doc_a < doc_b. Exactness: pigeonhole — two hashes within Hamming
-    distance ``max_hamming < bands`` must agree on at least one of the
-    ``bands`` disjoint bit-slices, so the band-equality self-join is a
-    SUPERSET of the answer and the ``bit_count(xor)`` verification
-    makes it exact (pinned vs brute force in tests/test_multimodal.py).
-    Scale: candidate work is bounded by bucket co-occupancy, never
-    all-pairs; ``shiftrightunsigned`` keeps the top band of a
-    sign-bit-set 64-bit hash from smearing."""
-    if not bits % bands == 0:
-        raise ValueError(f"bits {bits} not divisible by bands {bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"banding only exact for max_hamming < bands "
-            f"({max_hamming} >= {bands})"
-        )
-    width = bits // bands
-    mask = (1 << width) - 1
-    h = F.col(hash_col)
-    banded = hashes.select(
-        "doc_id",
-        h.alias("_h"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(h, i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "_h", "bk.band", "bk.val")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a._h").bitwiseXOR(F.col("b._h"))).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 # ------------------------------- duplicated spans (substring-level dedup)

@@ -175,61 +175,6 @@ def decode_image(payload: bytes) -> dict:
     )
 
 
-def pil_decode(payload: bytes) -> dict:
-    """Codec-backed decoder for the :func:`extract_features` seam:
-    any PIL-supported format (JPEG/PNG/WebP/…) → the same contract as
-    :func:`decode_image` (n_frames, mean over 8-bit grayscale pixels,
-    width/height/format). OPTIONAL dependency — raises a clear
-    ImportError when Pillow is absent (tests skip-if-absent); the
-    Spark-side plumbing (Arrow batching, schema, partitioning) is the
-    seam's and identical for any decoder. Grayscale conversion is
-    PIL's integer ITU-R 601-2 "L" mode — deterministic across hosts."""
-    import io
-
-    try:
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - codec-less container
-        raise ImportError(
-            "pil_decode needs Pillow (pip install Pillow); in a "
-            "codec-less environment use decode_image (PGM/BMP) or "
-            "fake_decode"
-        ) from e
-    img = Image.open(io.BytesIO(payload))
-    fmt = (img.format or "?").lower()
-    n_frames = int(getattr(img, "n_frames", 1))
-    gray = img.convert("L")
-    data = list(gray.getdata())
-    return {
-        "n_frames": n_frames,
-        "mean_byte": (sum(data) / len(data)) if data else 0.0,
-        "width": gray.width,
-        "height": gray.height,
-        "format": fmt,
-    }
-
-
-def pil_pixels(payload: bytes) -> list[list[int]]:
-    """Codec-backed grid decoder for the :func:`image_dhash` seam:
-    any PIL-supported payload → row-major 8-bit grayscale grid, the
-    exact shape :func:`decode_pixels` produces for PGM/BMP — so the
-    downstream dHash/banded-pair pipeline is byte-identical whichever
-    decoder fed it (parity pytest, skip-if-absent)."""
-    import io
-
-    try:
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - codec-less container
-        raise ImportError(
-            "pil_pixels needs Pillow (pip install Pillow); in a "
-            "codec-less environment use decode_pixels (PGM/BMP) or "
-            "fake_pixels"
-        ) from e
-    gray = Image.open(io.BytesIO(payload)).convert("L")
-    w, h = gray.width, gray.height
-    data = list(gray.getdata())
-    return [data[r * w : (r + 1) * w] for r in range(h)]
-
-
 def fake_decode(payload: bytes) -> dict:
     """Deterministic stand-in decoder used by tests and the registry
     query: frame count and mean byte value derived from the payload."""
@@ -502,31 +447,6 @@ def image_dhash(
             ).astype({"dhash": "int64"})
 
     return media.select("doc_id", "payload").mapInPandas(_batches, schema)
-
-
-def image_near_pairs(
-    media: DataFrame,
-    max_hamming: int = 3,
-    decoder: Callable[[bytes], list[list[int]]] = fake_pixels,
-) -> DataFrame:
-    """Image near-duplicate pairs: dHash fingerprints blocked through
-    the generic 4×16-bit banded Hamming join (exact for distance ≤ 3
-    by pigeonhole — operators/dedup.hamming_near_pairs), then
-    verified with ``bit_count(xor)``. The multimodal twin of
-    ``simhash_near_pairs``: same candidate-bounded 100 TB shape (no
-    all-pairs anywhere; the only data-sized shuffle keys on the band
-    buckets), with the Python work confined to the one Arrow-batched
-    hashing pass — pair generation and verification never leave the
-    JVM. Output feeds ``dedup.dup_clusters`` unchanged for
-    image-cluster canonicalization."""
-    from .dedup import hamming_near_pairs
-
-    from ..functions.caching import plan_cache
-
-    hashes = image_dhash(media, decoder).transform(plan_cache)
-    return hamming_near_pairs(
-        hashes, "dhash", bits=64, bands=4, max_hamming=max_hamming
-    )
 
 
 def dhash_sql(table: str = "documents") -> str:

@@ -19,13 +19,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import HEX_DIGITS, hash64_col, hash64_sql
 from ..functions.caching import plan_cache
-from ..sources.generations import (
-    compact_ledger,
-    fold_ledger,
-    ledger_buckets,
-    net_ledger,
-    write_ledger,
-)
 
 #: per-mille keep rates by language stratum; default applies to any
 #: stratum not listed (forward-compatible with new corpus languages)
@@ -1053,193 +1046,6 @@ def gumbel_topk_flags(
         flag_name="kept",
     )
     return flagged.drop("_gg")
-
-
-# ---------------------------------------------------------------------------
-# Persisted DSIR stats ledger + change-feed fold (SM3 as a MAINTAINED
-# artifact — the TS1 pattern: bucket counts are additive, so a
-# signed-delta ledger nets change-feed batches with no tombstones)
-# ---------------------------------------------------------------------------
-
-
-#: stamp row key: carries the FEATURE bucket count (the smoothing
-#: constant B) in d_rc so readers can't mis-smooth a ledger built
-#: with a different featurization
-_DSIR_STAMP_KEY = -1
-_DSIR_SUMS = ["d_tc", "d_rc"]
-
-
-def _dsir_deltas(
-    docs: DataFrame, target: Column, sign: int, n_buckets: int
-) -> DataFrame:
-    """Signed per-bucket delta rows: (_bucket, d_tc, d_rc). A pure
-    bucket aggregate (map-side combined over the exploded gram
-    stream) — deltas never need the per-doc collapse the scoring join
-    wants."""
-    from ..functions.hashing import hash64_col
-
-    g = docs.select(
-        F.coalesce(target, F.lit(False)).alias("_t"),
-        F.explode(_grams_col(F.col("text"))).alias("_gram"),
-    ).select(
-        "_t",
-        F.pmod(hash64_col(F.col("_gram"), seed=DSIR_SEED), F.lit(n_buckets)).alias(
-            "_bucket"
-        ),
-    )
-    return g.groupBy("_bucket").agg(
-        (F.lit(sign) * F.sum(F.when(F.col("_t"), 1).otherwise(0)))
-        .cast("long")
-        .alias("d_tc"),
-        (F.lit(sign) * F.count(F.lit(1))).cast("long").alias("d_rc"),
-    )
-
-
-def _dsir_stamp(spark, n_buckets: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(_DSIR_STAMP_KEY, 0, n_buckets)],
-        "_bucket long, d_tc long, d_rc long",
-    )
-
-
-def write_dsir_stats(
-    docs: DataFrame,
-    target: Column,
-    table: str,
-    n_buckets: int = DSIR_BUCKETS,
-    table_buckets: int = 16,
-) -> None:
-    """Build the persisted DSIR bucket-count ledger from scratch
-    (generation 0 + the featurization stamp row). The target
-    PREDICATE is part of the artifact's identity like the gen rule:
-    folds must evaluate the same predicate over their change rows —
-    feeding a different one is the caller's corruption (a Column
-    can't be stored; the stamp protects the other parameter, B)."""
-    base = _dsir_deltas(docs, target, 1, n_buckets).unionByName(
-        _dsir_stamp(docs.sparkSession, n_buckets)
-    )
-    write_ledger(base, table, "_bucket", table_buckets)
-
-
-def _dsir_spec(spark, table: str) -> tuple[int, int]:
-    """(table_buckets, feature_buckets) — validates the stamp."""
-    table_buckets = ledger_buckets(spark, table, "_bucket", "DSIR ledger")
-    stamp = (
-        spark.table(table)
-        .filter(F.col("_bucket") == _DSIR_STAMP_KEY)
-        .select("d_rc")
-        .distinct()
-        .collect()
-    )
-    if len(stamp) != 1:
-        raise ValueError(
-            f"{table} has {len(stamp)} featurization stamps; expected one"
-        )
-    return table_buckets, int(stamp[0][0])
-
-
-def apply_changes_to_dsir_stats(
-    spark, changes: DataFrame, target: Column, table: str, gen: int
-) -> None:
-    """Net one change-feed batch (read_changes vocabulary) into one
-    signed delta row per touched bucket and append it under ``gen``
-    (> 0; replay-collapsed by full-row distinct like TS1). Deletes and
-    update pre-images subtract, inserts and post-images add; ``target``
-    must be the base build's predicate evaluated over the change rows."""
-    table_buckets, n_buckets = _dsir_spec(spark, table)
-    fold_ledger(
-        spark, changes, table, gen,
-        lambda docs, sign: _dsir_deltas(docs, target, sign, n_buckets),
-        ["_bucket"], _DSIR_SUMS, table_buckets,
-    )
-
-
-def dsir_scores_cataloged(
-    spark, docs: DataFrame, table: str, base: DataFrame | None = None
-) -> DataFrame:
-    """Score ``docs`` against the PERSISTED ledger — the serving form
-    a daily pipeline runs (the expensive corpus-wide count pass was
-    paid at build time; a day's fold costs one batch-sized delta).
-    Identical integer scores to :func:`dsir_scores` on the ledger's
-    own corpus (pytest-pinned through a doctored-base + one-fold
-    repair, the TS1 adversarial pattern). Buckets the ledger never
-    saw get the zero-count smoothing weight
-    ``floor(1e6·ln((R+B)/(T+B)))`` — exactly what add-one smoothing
-    assigns them — via a left join + totals-derived fallback, so
-    scoring a NEW batch against yesterday's ledger is well-defined."""
-    from ..functions.hashing import hash64_col
-
-    _, n_buckets = _dsir_spec(spark, table)
-    led = (
-        net_ledger(
-            spark.table(table).filter(F.col("_bucket") != _DSIR_STAMP_KEY),
-            ["_bucket"], _DSIR_SUMS,
-        )
-        .filter(F.col("d_rc") != 0)
-        .select(
-            "_bucket", F.col("d_tc").alias("_tc"), F.col("d_rc").alias("_rc")
-        )
-        .transform(plan_cache)
-    )
-    totals = led.agg(F.sum("_rc").alias("_R"), F.sum("_tc").alias("_T"))
-    num = (F.col("_tc") + 1).cast("double") * (F.col("_R") + n_buckets).cast(
-        "double"
-    )
-    den = (F.col("_rc") + 1).cast("double") * (F.col("_T") + n_buckets).cast(
-        "double"
-    )
-    weights = led.crossJoin(F.broadcast(totals)).select(
-        "_bucket",
-        F.floor(F.lit(1000000.0) * F.log(num / den)).cast("long").alias("_w"),
-    )
-    w0 = totals.select(
-        F.floor(
-            F.lit(1000000.0)
-            * F.log(
-                (F.col("_R") + n_buckets).cast("double")
-                / (F.col("_T") + n_buckets).cast("double")
-            )
-        )
-        .cast("long")
-        .alias("_w0")
-    )
-    dt = (
-        docs.select(
-            "doc_id", F.explode(_grams_col(F.col("text"))).alias("_gram")
-        )
-        .select(
-            "doc_id",
-            F.pmod(
-                hash64_col(F.col("_gram"), seed=DSIR_SEED), F.lit(n_buckets)
-            ).alias("_bucket"),
-        )
-        .groupBy("doc_id", "_bucket")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    scores = (
-        dt.join(F.broadcast(weights), "_bucket", "left")
-        .crossJoin(F.broadcast(w0))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("_c") * F.coalesce(F.col("_w"), F.col("_w0"))).alias(
-                "dsir_score_unat"
-            )
-        )
-    )
-    spine = docs.select("doc_id") if base is None else base
-    return spine.join(scores, "doc_id", "left").withColumn(
-        "dsir_score_unat",
-        F.coalesce(F.col("dsir_score_unat"), F.lit(0)).cast("long"),
-    )
-
-
-def compact_dsir_stats(spark, table: str) -> None:
-    """Collapse the ledger back to generation 0 (net live counts +
-    the stamp, whose one row nets to itself) — bounded read
-    amplification after many folds; same crash contract and
-    replay-window truncation as compact_term_stats."""
-    table_buckets, _ = _dsir_spec(spark, table)
-    compact_ledger(spark, table, ["_bucket"], _DSIR_SUMS, table_buckets)
 
 
 def stratified_sample_sql(

@@ -13,7 +13,6 @@ from ..functions.text import (
     BPE_REGEX,
     QUALITY_STOPWORDS,
     lang_argmax_col,
-    lang_id_col,
     lang_id_sql,
     shingles_col,
     shingles_sql,
@@ -24,19 +23,8 @@ from ..functions.text import (
 )
 
 
-def token_stats(docs: DataFrame) -> DataFrame:
-    """Whitespace + BPE-ish token counts and char length per doc."""
-    tok = tokens_col(F.col("text"))
-    bpe = F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), 0)
-    return docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        F.size(tok).alias("n_tokens"),
-        F.size(bpe).alias("n_bpe_tokens"),
-        F.size(F.array_distinct(tok)).alias("n_unique_tokens"),
-    )
-
-
+#: DuckDB twin of text_profile's token-stat columns (TX1): whitespace
+#: and BPE-ish token counts and char length per doc.
 TOKEN_STATS_SQL = f"""
 select doc_id, length(text) as n_chars,
        len({tokens_sql('text')}) as n_tokens,
@@ -167,19 +155,8 @@ def quality_scores_sql() -> str:
     """
 
 
-def lang_id(docs: DataFrame) -> DataFrame:
-    """Stopword-profile language ID with agreement flag against the
-    dataset's labeled ``lang`` column."""
-    tok = tokens_col(F.col("text"))
-    pred = lang_id_col(tok)
-    return docs.select(
-        "doc_id",
-        pred.alias("lang_pred"),
-        F.col("lang").alias("lang_label"),
-        (pred == F.col("lang")).cast("int").alias("agree"),
-    )
-
-
+#: DuckDB twin of text_profile's language-ID columns (TX3):
+#: stopword-profile language with agreement flag against ``lang``.
 LANG_ID_SQL = f"""
 with t as (select doc_id, lang, {tokens_sql('text')} as tok from documents)
 select doc_id, {lang_id_sql('tok')} as lang_pred, lang as lang_label,
@@ -236,29 +213,12 @@ PII_PATTERNS = {
 PII_TOKEN = "<pii>"
 
 
-def pii_scrub(docs: DataFrame) -> DataFrame:
-    """Redaction pass for a training corpus: count PII matches per
-    class and emit the md5 of the redacted text (proving the rewrite
-    without shipping the text). All codegen built-ins; the patterns
-    are deliberately in the Java∩RE2 regex subset so the DuckDB twin
-    is bit-identical. Order matters: ssn before phone (their shapes
-    overlap) — both engines apply the same sequence."""
-    redacted = F.col("text")
-    counts = []
-    for name, pat in PII_PATTERNS.items():
-        counts.append(
-            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0)).alias(
-                f"n_{name}"
-            )
-        )
-    for name in ("ssn", "phone", "email"):  # overlap-safe order
-        redacted = F.regexp_replace(redacted, PII_PATTERNS[name], PII_TOKEN)
-    return docs.select(
-        "doc_id", *counts, F.md5(redacted).alias("redacted_md5")
-    )
-
-
 def pii_scrub_sql() -> str:
+    """DuckDB twin of text_profile's redaction columns (TX5): PII
+    matches per class and the md5 of the redacted text. The patterns
+    are in the Java∩RE2 regex subset so both engines agree bit for
+    bit. Order matters: ssn before phone (their shapes overlap), the
+    same sequence text_profile applies."""
     counts = ", ".join(
         f"len(regexp_extract_all(text, '{pat}')) as n_{name}"
         for name, pat in PII_PATTERNS.items()
@@ -281,8 +241,8 @@ def max_run_count_col(grams):
     """Count of the most frequent element of an array column: sort,
     then one ``aggregate`` pass tracking the longest equal-run — no
     explode, no groupBy, no join. O(k log k) per row inside the JVM.
-    THE single run-length rule — _repetition_exprs and the staged
-    text_profile both call this."""
+    THE single run-length rule — text_profile and the Gopher top-3
+    ratio both call this."""
     zero = F.lit(0).cast("long")
     init = F.struct(
         F.lit("").alias("prev"), zero.alias("run"), zero.alias("best")
@@ -301,33 +261,10 @@ def max_run_count_col(grams):
     return F.aggregate(F.array_sort(grams), init, merge, lambda acc: acc["best"])
 
 
-def _repetition_exprs(tok, n: int = 2) -> tuple:
-    """Row-local repetition signal: sort the n-gram array, then a
-    single ``aggregate`` pass finds the longest equal-run — the count
-    of the most frequent n-gram — with no explode, no groupBy, no
-    join. O(k log k) per row inside the JVM; at 100 TB this keeps
-    TX6 inside the same embarrassingly-parallel scan as every other
-    per-document profile column (the previous explode+two-aggregation
-    form paid two shuffles for a value derivable row-locally)."""
-    grams = shingles_col(tok, n)
-    max_c = max_run_count_col(grams)
-    total = F.size(grams).cast("long")
-    ratio = F.when(total == 0, F.lit(0.0)).otherwise(max_c / total)
-    return total.alias("n_bigrams"), ratio.alias("top_bigram_ratio")
-
-
-def repetition_stats(docs: DataFrame, n: int = 2) -> DataFrame:
-    """Intra-document repetition: the fraction of all word ``n``-grams
-    taken by the single most frequent one — the "repetitious text"
-    quality signal (high ratio = boilerplate loops, keyword stuffing,
-    degenerate generations). Exact-integer ratio (max/total divides
-    bit-identically in both engines; no rounding). Docs with fewer
-    than one n-gram get ratio 0.0 over 0 grams."""
-    n_bigrams, ratio = _repetition_exprs(tokens_col(F.col("text")), n)
-    return docs.select("doc_id", n_bigrams, ratio)
-
-
 def repetition_stats_sql(n: int = 2) -> str:
+    """DuckDB twin of text_profile's repetition columns (TX6): the
+    fraction of a doc's word ``n``-grams taken by the most frequent
+    one, 0.0 over 0 grams for docs with fewer than one n-gram."""
     toks = tokens_sql("text")
     return f"""
     with t as (
@@ -543,9 +480,8 @@ def text_profile(docs: DataFrame) -> DataFrame:
 
     All eighteen output columns are row-local expressions, so the
     whole profile is zero-shuffle: the optimal 100 TB shape
-    (scan-parallel, no exchange). The per-analysis operators above
-    remain the unit-testable parts; this is the composition a
-    production profile job runs.
+    (scan-parallel, no exchange). The per-analysis ``*_sql`` twins
+    above are its DuckDB oracle.
 
     Staged projections, deliberately: higher-order functions
     (``filter``/``transform``/``aggregate`` lambdas) are

@@ -1,8 +1,8 @@
 """Generations: the lifecycle every persisted serving artifact shares.
 
 Each artifact (the IVF / PQ / IVF-PQ indexes and the raw-vector store,
-the dedup signature catalog, the BM25 postings, term-stats and DSIR
-ledgers) is a BASE build at generation 0 plus change-feed folds
+the dedup signature catalog, the BM25 postings and the term-stats
+ledger) is a BASE build at generation 0 plus change-feed folds
 appended under generations > 0, periodically compacted back to a
 single generation 0. The families differ only in how they encode a
 batch of documents or vectors; the four steps below are the same for
@@ -15,8 +15,8 @@ all of them and live here once.
    several probes and writes a fold makes re-read materialized rows,
    never the feed's snapshot join).
 2. **Signed ledgers** — :func:`write_ledger`, :func:`fold_ledger`,
-   :func:`net_ledger`, :func:`compact_ledger`. Additive statistics (term counts, DSIR
-   bucket counts, BM25 postings) fold as signed delta rows appended
+   :func:`net_ledger`, :func:`compact_ledger`. Additive statistics
+   (term counts, BM25 postings) fold as signed delta rows appended
    to a table bucketed on the ledger key: deletes subtract, inserts
    add, nothing is tombstoned. A read nets the generations with a
    bucket-local ``distinct`` (the replay collapse: a re-run fold

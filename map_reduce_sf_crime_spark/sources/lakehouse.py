@@ -38,7 +38,17 @@ from functools import partial, reduce
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    AtomicType,
+    DataType,
+    MapType,
+    NullType,
+    StructField,
+    StructType,
+    UserDefinedType,
+    VariantType,
+)
 
 from . import manifests
 
@@ -54,7 +64,14 @@ def write_partitioned(
     a partition column keeps its written type instead of the one Spark
     guesses from its directory name. Merges and compactions keep the
     record; another mode deletes it if the schema differs, and the
-    table reads by inference, like a plain ``df.write.partitionBy``."""
+    table reads by inference, like a plain ``df.write.partitionBy``.
+
+    An overwrite starts a new history: Spark removes the table root,
+    commit log included, so every earlier commit id, ``.archive``
+    pre-image and lease goes with it. On a table that has a commit log
+    it therefore takes the table lease (:func:`acquire_lease`) first:
+    a live writer's lease raises :class:`ConcurrentWriterError` and
+    leaves the log intact."""
     spark = df.sparkSession
     fields = [f for f in df.schema if f.name not in partition_cols]
     fields += [df.schema[c] for c in partition_cols]
@@ -66,7 +83,19 @@ def write_partitioned(
     if recorded not in (None, schema):
         fs, jvm = _hfs(spark, record)
         fs.delete(jvm.org.apache.hadoop.fs.Path(record), False)
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    token = None
+    if mode == "overwrite":
+        fs, jvm = _hfs(spark, path)
+        log_dir = f"{path.rstrip('/')}/{_COMMITS_DIR}"
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(log_dir)):
+            token = acquire_lease(spark, path)
+    try:
+        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    finally:
+        if token is not None:
+            # a finished overwrite removed the lease with the old log
+            with suppress(ConcurrentWriterError):
+                release_lease(spark, path, token)
     if mode == "overwrite":
         _write_json(spark, record, schema)
 
@@ -179,11 +208,49 @@ def _reader(
     return spark.read.schema(StructType.fromJson(rec)) if rec else spark.read
 
 
-def _null_safe_eq(cols: list[str], left: str, right: str) -> Column | None:
+def _orderable(dt: DataType) -> bool:
+    """Whether ``<=>`` can compare values of ``dt`` (Spark's
+    ``RowOrdering.isOrderable``): maps and variants cannot be ordered,
+    nor can a struct or array holding one."""
+    if isinstance(dt, StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, UserDefinedType):
+        return _orderable(dt.sqlType())
+    return isinstance(dt, (NullType, AtomicType)) and not isinstance(
+        dt, VariantType
+    )
+
+
+def _null_safe_eq(
+    cols: list[str], left: str, right: str, schema: StructType | None = None
+) -> Column | None:
     """``left.c <=> right.c`` ANDed over ``cols`` (``None`` for none):
     a NULL key or partition value matches its own NULL, where ``==``
-    is never true."""
-    eqs = [F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols]
+    is never true.
+
+    Given the columns' ``schema``, a map column compares as its entries
+    sorted by key, ``array_sort(map_entries(c))``: ``<=>`` cannot order
+    maps, and two maps holding the same entries are equal whatever
+    their order. A column that is still unorderable (a map of maps, a
+    struct holding a map) raises ValueError naming it."""
+    eqs = []
+    for c in cols:
+        lhs, rhs = F.col(f"{left}.{c}"), F.col(f"{right}.{c}")
+        if schema is not None:
+            dt = schema[c].dataType
+            if isinstance(dt, MapType):
+                lhs, rhs = (F.array_sort(F.map_entries(x)) for x in (lhs, rhs))
+                dt = StructType(
+                    [StructField("key", dt.keyType), StructField("value", dt.valueType)]
+                )
+            if not _orderable(dt):
+                raise ValueError(
+                    f"column {c!r} of type {schema[c].dataType.simpleString()} "
+                    "cannot be compared for equality"
+                )
+        eqs.append(lhs.eqNullSafe(rhs))
     return reduce(operator.and_, eqs) if eqs else None
 
 
@@ -782,7 +849,7 @@ def _read_resolved(
 
 #: The public Delta-CDF change-type vocabulary read_changes emits —
 #: THE single definition every fold consumer imports (term stats,
-#: DSIR stats, signature catalog, ANN indexes, postings index), so
+#: signature catalog, ANN indexes, postings index), so
 #: the dead/live split can never drift between them.
 CDF_DEAD_TYPES = ("delete", "update_preimage")
 CDF_LIVE_TYPES = ("insert", "update_postimage")
@@ -854,6 +921,9 @@ def read_changes(
     val_cols = [c for c in cols if c not in key_cols]
     pre, post = pre_df.alias("pre"), post_df.alias("post")
     cond = _null_safe_eq(key_cols, "pre", "post")
+    same = _null_safe_eq(val_cols, "pre", "post", post_df.schema)
+    if same is None:  # key-only table: matched rows are identical
+        same = F.lit(True)
     # presence is detectable without flag columns only if some column
     # is non-null; a literal marker is unconditionally sound
     joined = (
@@ -865,9 +935,6 @@ def read_changes(
             how="full_outer",
         )
     )
-    same = _null_safe_eq(val_cols, "pre", "post")
-    if same is None:  # key-only table: matched rows are identical
-        same = F.lit(True)
 
     def _img(side: str, tag: str):
         return F.struct(
@@ -1531,7 +1598,7 @@ def swap_rewrite(
     until the write is complete), then two renames swap it in and the
     old copy is dropped. The table-level twin of
     ``generations.swap_dir``; the compaction of every bucketed store
-    (signature catalog, term-stats and DSIR ledgers) runs through it.
+    (signature catalog, term-stats ledger) runs through it.
 
     Crash contract (single writer, like the commit manifest): each
     window is recoverable and re-running is always safe —

@@ -43,10 +43,3 @@ def read_report(
     return raw.select("key", F.from_csv("value", value_schema.simpleString()).alias("v")).select(
         "key", "v.*"
     )
-
-
-def extract_keys(report: DataFrame) -> list[str]:
-    """DataFile.extractKeys (DataFile.java:43-57): sorted distinct keys.
-    Driver-side by design — it feeds dimension construction, which is
-    tiny; the distributed twin is operators.dims.dictionary_encode."""
-    return [r.key for r in report.select("key").distinct().orderBy("key").collect()]

@@ -557,139 +557,6 @@ def test_gumbel_topk_matches_reference(spark):
 
 
 @pytest.mark.slow
-def test_dsir_ledger_fold_equals_live(spark):
-    """SM3 as a maintained artifact: a DOCTORED base build (held-out
-    slice missing, junk phantom docs, corrupted texts) repaired by ONE
-    change-feed fold must serve scores bit-identically to the live
-    recompute on the true corpus; replays collapse; compaction
-    preserves totals; unseen buckets get the closed-form zero-count
-    smoothing weight (python-mirrored)."""
-    from pyspark.sql import functions as SF
-
-    docs = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    target = SF.col("lang") == SF.lit("en")
-    tbl = "dsir_ledger_test"
-    spark.sql(f"drop table if exists {tbl}")
-
-    held = SF.col("doc_id") % 5 == 4
-    corrupt = ~held & (SF.col("doc_id") % 17 == 5)
-    doctored = docs.filter(~held).withColumn(
-        "text",
-        SF.when(corrupt, SF.concat(SF.col("text"), SF.lit(" zzzdriftzzz")))
-        .otherwise(SF.col("text")),
-    )
-    junk = docs.filter(SF.col("doc_id") % 17 == 3).select(
-        (SF.col("doc_id") + 10_000_000).alias("doc_id"),
-        SF.concat(SF.lit("junkphantom "), SF.col("text")).alias("text"),
-        SF.lit("en").alias("lang"),  # phantoms poison the TARGET side too
-    )
-    sampling.write_dsir_stats(
-        doctored.unionByName(junk), target, tbl, n_buckets=256
-    )
-    changes = (
-        junk.withColumn("_change_type", SF.lit("delete"))
-        .unionByName(
-            doctored.filter(corrupt).withColumn(
-                "_change_type", SF.lit("update_preimage")
-            )
-        )
-        .unionByName(
-            docs.filter(corrupt).withColumn(
-                "_change_type", SF.lit("update_postimage")
-            )
-        )
-        .unionByName(
-            docs.filter(held).withColumn("_change_type", SF.lit("insert"))
-        )
-        .localCheckpoint()
-    )
-    sampling.apply_changes_to_dsir_stats(spark, changes, target, tbl, gen=1)
-
-    def rows(df):
-        return {(r.doc_id, r.dsir_score_unat) for r in df.collect()}
-
-    want = rows(sampling.dsir_scores(docs, target, n_buckets=256))
-    assert rows(sampling.dsir_scores_cataloged(spark, docs, tbl)) == want
-
-    # replayed fold collapses; compaction preserves; one gen remains
-    sampling.apply_changes_to_dsir_stats(spark, changes, target, tbl, gen=1)
-    assert rows(sampling.dsir_scores_cataloged(spark, docs, tbl)) == want
-    sampling.compact_dsir_stats(spark, tbl)
-    assert rows(sampling.dsir_scores_cataloged(spark, docs, tbl)) == want
-    assert spark.table(tbl).select("gen").distinct().count() == 1
-
-    # unseen buckets: python mirror of the w0 fallback formula
-    import hashlib
-    import math
-
-    led = {
-        int(r["_bucket"]): (int(r["d_tc"]), int(r["d_rc"]))
-        for r in spark.table(tbl).collect()
-        if r["_bucket"] != sampling._DSIR_STAMP_KEY
-    }
-    R = sum(rc for _, rc in led.values())
-    T = sum(tc for tc, _ in led.values())
-    B = 256
-    w0 = math.floor(1e6 * math.log((R + B) / (T + B)))
-
-    def h64(s):
-        return int(hashlib.md5(f"dsir:{s}".encode()).hexdigest()[:15], 16)
-
-    text = "qqqneverseen wordx wordy"
-    toks = text.split()
-    grams = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-    expect = 0
-    for g in grams:
-        b = h64(g) % B
-        if b in led:
-            tc, rc = led[b]
-            expect += math.floor(
-                1e6 * math.log(((tc + 1) * (R + B)) / ((rc + 1) * (T + B)))
-            )
-        else:
-            expect += w0
-    probe = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    got = sampling.dsir_scores_cataloged(spark, probe, tbl).collect()[0]
-    assert got.dsir_score_unat == expect
-
-    # a non-ledger table is refused loudly
-    import pytest
-
-    spark.sql("drop table if exists dsir_notledger")
-    spark.range(3).withColumnRenamed("id", "x").write.saveAsTable("dsir_notledger")
-    with pytest.raises(ValueError, match="not a DSIR ledger|bucket"):
-        sampling.dsir_scores_cataloged(spark, docs, "dsir_notledger")
-    spark.sql("drop table if exists dsir_notledger")
-    spark.sql(f"drop table if exists {tbl}")
-
-
-def test_dsir_ledger_read_rides_bucket_layout(spark):
-    """The cataloged read's ledger scan must ride the bucket spec
-    (distinct + groupBy(_bucket) collapse bucket-locally, no
-    token...bucket-keyed exchange on the ledger side) — the TS1
-    layout pin applied to SM3."""
-    from pyspark.sql import functions as SF
-
-    docs = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    tbl = "dsir_ledger_layout"
-    spark.sql(f"drop table if exists {tbl}")
-    sampling.write_dsir_stats(
-        docs, SF.col("lang") == SF.lit("en"), tbl, n_buckets=128
-    )
-    plan = (
-        sampling.dsir_scores_cataloged(spark, docs, tbl)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    scan_lines = [l for l in plan.splitlines() if tbl in l]
-    assert scan_lines and "SelectedBucketsCount" in "\n".join(scan_lines)
-    spark.sql(f"drop table if exists {tbl}")
-
-
-@pytest.mark.slow
 def test_fused_commonness_dsir_equals_unfused(spark):
     """The round-6 fused TF2+SM3 scorer (one tokenize, one doc-keyed
     aggregate, one spine join) is bit-identical to composing

@@ -369,13 +369,10 @@ def test_snapshot_drift(spark):
     assert drift["source"].distinct_ratio > 1.0
 
 
-def test_k_anonymity_flags_and_summary(spark):
+def test_k_anonymity_flags(spark):
     """DQ5 privacy audit: known equivalence classes (incl. a NULL
-    quasi value as its own class), per-row flags consistent with the
-    summary, l-diversity floor, arg validation."""
-    import pytest
-    from pyspark.sql import functions as F
-
+    quasi value as its own class), per-row flags, l-diversity, arg
+    validation."""
     rows = (
         [(i, "en", "srcA", f"s{i}") for i in range(6)]         # size 6, l=6
         + [(10, "en", "srcB", "x"), (11, "en", "srcB", "x")]    # size 2, l=1
@@ -397,45 +394,38 @@ def test_k_anonymity_flags_and_summary(spark):
     assert flags[10] == (2, 1, 1)
     assert flags[20] == (1, 1, 1)  # NULL source is a real class
     assert flags[30] == (3, 2, 0)
-    s = dq.k_anonymity_summary(
-        df, ["lang", "source"], k=3, sensitive_col="sens"
-    ).collect()[0]
-    assert (
-        s.k, s.n_rows, s.n_classes, s.n_small_classes,
-        s.n_rows_at_risk, s.min_class_size, s.min_l_div,
-    ) == (3, 12, 4, 2, 3, 1, 1)
-    # rows_at_risk == number of flagged rows
-    assert s.n_rows_at_risk == sum(1 for _, _, r in flags.values() if r)
+    assert sum(1 for _, _, r in flags.values() if r) == 3
     with pytest.raises(ValueError, match="quasi_cols"):
-        dq.k_anonymity_summary(df, [])
+        dq.k_anonymity_flags(df, [])
     with pytest.raises(ValueError, match="k must"):
         dq.k_anonymity_flags(df, ["lang"], k=0)
 
 
 def test_k_anonymity_matches_duckdb_twin(spark):
-    """Summary bit-equality with the DuckDB twin on the real
+    """Per-row flag equality with the DuckDB twin on the real
     documents table, quasi = (lang, source)."""
-    import duckdb
-
     docs = load_table(spark, SF_SMOKE, "documents")
-    got = tuple(
-        dq.k_anonymity_summary(
+    got = sorted(
+        tuple(r)
+        for r in dq.k_anonymity_flags(
             docs, ["lang", "source"], k=5, sensitive_col="n_chars"
-        ).collect()[0]
+        ).collect()
     )
     con = duckdb.connect()
     con.sql(
         f"create view documents as select * from "
         f"read_parquet('{SF_SMOKE}/documents.parquet')"
     )
-    want = con.sql(
-        dq.k_anonymity_summary_sql(
-            ["lang", "source"], k=5, sensitive_col="n_chars"
-        )
-    ).fetchall()[0]
-    assert got == tuple(want)
-    # the synthetic corpus genuinely straddles k=5 (some classes small)
-    assert 0 < got[3] < got[2]
+    want = sorted(
+        con.sql(
+            dq.k_anonymity_flags_sql(
+                ["lang", "source"], k=5, sensitive_col="n_chars"
+            )
+        ).fetchall()
+    )
+    assert got == want
+    # the synthetic corpus genuinely straddles k=5 (some rows at risk)
+    assert 0 < sum(r[-1] for r in got) < len(got)
 
 
 def test_column_profile_rejects_duplicate_cols(spark):

@@ -24,7 +24,7 @@ def _empty_emb(spark):
 
 def test_dedup_ops_on_empty(spark):
     docs = _empty_docs(spark)
-    assert dedup.exact_dedup_stats(docs).count() == 0
+    assert dedup.dedup_keep_first(docs).count() == 0
     assert dedup.near_dup_pairs_exact(docs).count() == 0
     assert dedup.lsh_near_dup_pairs(docs).count() == 0
     assert dedup.simhash_near_pairs(docs).count() == 0
@@ -46,7 +46,7 @@ def test_similarity_ops_on_empty(spark):
 def test_text_and_multimodal_on_empty(spark):
     docs = _empty_docs(spark)
     assert textops.quality_scores(docs).count() == 0
-    assert textops.lang_id(docs).count() == 0
+    assert textops.text_profile(docs).count() == 0
     media = multimodal.with_payload(docs)
     assert multimodal.extract_features(media).count() == 0
     assert multimodal.sample_frames(media).count() == 0

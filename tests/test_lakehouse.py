@@ -913,7 +913,7 @@ def test_compact_bucketed_preserves_probe_and_recovers(spark):
 
 
 
-@pytest.mark.parametrize("compact", ["compact_term_stats", "compact_dsir_stats"])
+@pytest.mark.parametrize("compact", ["compact_term_stats"])
 def test_ledger_compaction_failure_keeps_ledger(spark, monkeypatch, compact):
     """A ledger compaction whose rewrite job FAILS must leave the
     ledger serving its pre-compaction totals: the netted rows go to
@@ -921,7 +921,7 @@ def test_ledger_compaction_failure_keeps_ledger(spark, monkeypatch, compact):
     a failure never touches the table being read (an in-place
     ``saveAsTable`` overwrite drops the table when its job fails), and
     recovery finds the ledger intact."""
-    from map_reduce_sf_crime_spark.operators import sampling, termstats
+    from map_reduce_sf_crime_spark.operators import termstats
     from map_reduce_sf_crime_spark.sources import lakehouse
 
     docs = load_table(spark, SF_SMOKE, "documents").select(
@@ -935,18 +935,11 @@ def test_ledger_compaction_failure_keeps_ledger(spark, monkeypatch, compact):
         .withColumn("_change_type", F.lit("delete"))
         .localCheckpoint()
     )
-    if compact == "compact_term_stats":
-        termstats.write_term_stats(docs, tbl)
-        termstats.apply_changes_to_term_stats(spark, changes, tbl, gen=1)
-        serve = lambda: termstats.token_doc_freq_cataloged(spark, tbl, 50)  # noqa: E731
-        run = termstats.compact_term_stats
-    else:
-        target = F.col("lang") == F.lit("en")
-        sampling.write_dsir_stats(docs, target, tbl, n_buckets=64)
-        sampling.apply_changes_to_dsir_stats(spark, changes, target, tbl, gen=1)
-        serve = lambda: sampling.dsir_scores_cataloged(spark, docs, tbl)  # noqa: E731
-        run = sampling.compact_dsir_stats
-    rows = lambda: sorted(tuple(r) for r in serve().collect())  # noqa: E731
+    termstats.write_term_stats(docs, tbl)
+    termstats.apply_changes_to_term_stats(spark, changes, tbl, gen=1)
+    rows = lambda: sorted(  # noqa: E731
+        tuple(r) for r in termstats.token_doc_freq_cataloged(spark, tbl, 50).collect()
+    )
     want = rows()
     assert want
 
@@ -958,7 +951,7 @@ def test_ledger_compaction_failure_keeps_ledger(spark, monkeypatch, compact):
 
     monkeypatch.setattr(lakehouse, "write_bucketed", failing_write)
     with pytest.raises(Exception, match="injected rewrite failure"):
-        run(spark, tbl)
+        getattr(termstats, compact)(spark, tbl)
     monkeypatch.undo()
 
     assert spark.catalog.tableExists(tbl)
@@ -1737,3 +1730,107 @@ def test_compaction_refuses_over_inflight_partition_intent(spark):
     release_lease(spark, path, token)
     with pytest.raises(ConcurrentWriterError, match="refusing to compact"):
         compact_partitioned(spark, path, ["month"])
+
+
+def test_overwrite_takes_the_lease_and_keeps_a_held_log(spark, tmp_path):
+    """An overwrite removes the commit log with the table root, so on a
+    table with a log it takes the lease first: while another writer
+    holds it the overwrite raises, and every intent, commit, archive
+    and the lease survive. Once the lease is released the overwrite
+    starts a new history."""
+    from map_reduce_sf_crime_spark.sources.lakehouse import (
+        ConcurrentWriterError,
+        acquire_lease,
+        merge_upsert,
+        read_as_of,
+        release_lease,
+    )
+
+    path = str(tmp_path / "leased")
+    log_dir = os.path.join(path, "_commits")
+    base = spark.createDataFrame(
+        [(i, i % 2, i * 10) for i in range(6)], "id long, p int, v long"
+    )
+    write_partitioned(base, path, ["p"])
+    merge_upsert(
+        spark, path,
+        base.filter("id = 1").withColumn("v", F.lit(-1).cast("long")),
+        key_cols=["id"], partition_cols=["p"], archive=True,
+    )
+    token = acquire_lease(spark, path)
+    held = sorted(os.listdir(log_dir))
+    assert {"000000.archive", "000000.commit.json", "000000.intent.json",
+            "_lease.json"} <= set(held)
+
+    with pytest.raises(ConcurrentWriterError, match="locked by a live writer"):
+        write_partitioned(base, path, ["p"])
+    assert sorted(os.listdir(log_dir)) == held
+    assert read_as_of(spark, path, 0).filter("id = 1").first().v == -1
+    release_lease(spark, path, token)  # still the holder's own lease
+
+    write_partitioned(base, path, ["p"])
+    assert [f for f in os.listdir(log_dir) if not f.endswith(".crc")] == [
+        "_schema.json"
+    ]
+    with pytest.raises(ValueError):
+        read_as_of(spark, path, 0)
+
+
+def test_read_changes_diffs_map_columns(spark, tmp_path):
+    """read_changes compares a map value column by its entries: a map
+    changed in the range is an update, one whose entries were only
+    reordered is not. A column that is still unorderable (a struct
+    holding a map) raises naming the column, before any join."""
+    from map_reduce_sf_crime_spark.sources.lakehouse import (
+        merge_upsert,
+        read_changes,
+    )
+
+    path = str(tmp_path / "mapped")
+    base = spark.range(6).select(
+        "id", (F.col("id") % 2).alias("p"),
+        F.create_map(F.lit("k"), "id").alias("m"),
+    )
+    write_partitioned(base, path, ["p"])
+
+    def merge(changes):
+        merge_upsert(spark, path, changes, key_cols=["id"],
+                     partition_cols=["p"], archive=True)
+
+    for i in (1, 2):
+        merge(base.filter(F.col("id") == i).withColumn(
+            "m", F.create_map(F.lit("k"), F.lit(100 * i).cast("long"))
+        ))
+    got = sorted(
+        (r.id, r._change_type, dict(r.m))
+        for r in read_changes(spark, path, 0, 1, ["id"]).collect()
+    )
+    assert got == [
+        (2, "update_postimage", {"k": 200}),
+        (2, "update_preimage", {"k": 2}),
+    ]
+
+    path2 = str(tmp_path / "reordered")
+    two = spark.range(4).select(
+        "id", (F.col("id") % 2).alias("p"),
+        F.create_map(F.lit("a"), "id", F.lit("b"), F.col("id") + 1).alias("m"),
+    )
+    write_partitioned(two, path2, ["p"])
+    flipped = two.withColumn(
+        "m", F.create_map(F.lit("b"), F.col("id") + 1, F.lit("a"), "id")
+    )
+    for cid in (0, 1):
+        merge_upsert(spark, path2, flipped.filter(F.col("id") == cid),
+                     key_cols=["id"], partition_cols=["p"], archive=True)
+    stored = read_partitioned(spark, path2).filter("id = 1").select(F.map_keys("m"))
+    assert stored.first()[0] == ["b", "a"]
+    assert read_changes(spark, path2, 0, 1, ["id"]).count() == 0
+
+    path3 = str(tmp_path / "nested")
+    nested = base.select("id", "p", F.struct("m").alias("s"))
+    write_partitioned(nested, path3, ["p"])
+    for cid in (0, 1):
+        merge_upsert(spark, path3, nested.filter(F.col("id") == cid),
+                     key_cols=["id"], partition_cols=["p"], archive=True)
+    with pytest.raises(ValueError, match="'s'"):
+        read_changes(spark, path3, 0, 1, ["id"])

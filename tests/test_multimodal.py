@@ -226,159 +226,6 @@ def test_fake_pixels_shape_and_determinism():
     assert multimodal.fake_pixels(b"") == [[0] * 9 for _ in range(8)]
 
 
-def test_image_near_pairs_exact_vs_bruteforce(spark):
-    """The banded Hamming join finds EXACTLY the brute-force
-    Hamming<=3 pair set over real decoded PGM images — near-dups are
-    perturbed copies (a few pixels nudged), far images independent."""
-    import random
-
-    rng = random.Random(42)
-    imgs = []
-    for i in range(30):
-        px = bytes(rng.randrange(256) for _ in range(16 * 16))
-        imgs.append((i, _make_pgm(16, 16, px)))
-        if i % 3 == 0:  # a near-dup twin: nudge 3 pixels by +/-2
-            arr = bytearray(px)
-            for _ in range(3):
-                j = rng.randrange(len(arr))
-                arr[j] = max(0, min(255, arr[j] + rng.choice((-2, 2))))
-            imgs.append((100 + i, _make_pgm(16, 16, bytes(arr))))
-    media = spark.createDataFrame(imgs, "doc_id long, payload binary")
-    got = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in multimodal.image_near_pairs(
-            media, max_hamming=3, decoder=multimodal.decode_pixels
-        ).collect()
-    }
-    hashes = {
-        i: multimodal.dhash64(multimodal.decode_pixels(p)) for i, p in imgs
-    }
-    mask = (1 << 64) - 1
-    want = set()
-    ids = sorted(hashes)
-    for x in range(len(ids)):
-        for y in range(x + 1, len(ids)):
-            a, b = ids[x], ids[y]
-            d = bin((hashes[a] ^ hashes[b]) & mask).count("1")
-            if d <= 3:
-                want.add((a, b, d))
-    assert got == want
-    assert want, "fixture produced no near pairs — perturb less"
-    # twins should dominate the pair set
-    twin_pairs = {(a, b) for a, b, _ in want if b == a + 100}
-    assert len(twin_pairs) >= 5
-
-
-def test_image_near_pairs_feeds_clusters(spark):
-    """Composability: the pair frame drives dedup.dup_clusters
-    unchanged — three perturbed copies of one image collapse to one
-    cluster keyed by the min doc_id."""
-    from map_reduce_sf_crime_spark.operators import dedup
-
-    base = bytes((i * 7) % 256 for i in range(16 * 16))
-    variants = []
-    for k in range(3):
-        arr = bytearray(base)
-        arr[k] = min(255, arr[k] + 1)
-        variants.append((10 + k, _make_pgm(16, 16, bytes(arr))))
-    media = spark.createDataFrame(
-        variants + [(99, _make_pgm(16, 16, bytes(reversed(base))))],
-        "doc_id long, payload binary",
-    )
-    pairs = multimodal.image_near_pairs(
-        media, max_hamming=3, decoder=multimodal.decode_pixels
-    )
-    clusters = dedup.dup_clusters(pairs).collect()
-    assert {r.doc_id: r.cluster_id for r in clusters} == {
-        10: 10,
-        11: 10,
-        12: 10,
-    }
-
-
-def test_hamming_near_pairs_validation(spark):
-    from map_reduce_sf_crime_spark.operators import dedup
-
-    hashes = spark.createDataFrame([(1, 5)], "doc_id long, h long")
-    with pytest.raises(ValueError, match="not divisible"):
-        dedup.hamming_near_pairs(hashes, "h", bits=64, bands=5)
-    with pytest.raises(ValueError, match="only exact"):
-        dedup.hamming_near_pairs(hashes, "h", bands=4, max_hamming=4)
-
-
-def test_hamming_near_pairs_sign_bit(spark):
-    """A 64-bit hash with the sign bit set must band correctly
-    (shiftrightunsigned): two hashes differing only in bit 63 are
-    Hamming 1 and MUST be found."""
-    from map_reduce_sf_crime_spark.operators import dedup
-
-    a = -(1 << 63)  # only bit 63 set
-    b = -(1 << 63) | 1  # bits 63 and 0
-    hashes = spark.createDataFrame(
-        [(1, a), (2, b)], "doc_id long, h long"
-    )
-    got = dedup.hamming_near_pairs(hashes, "h").collect()
-    assert [(r.doc_a, r.doc_b, r.hamming) for r in got] == [(1, 2, 1)]
-
-
-def test_pil_pixels_dhash_parity_when_codec_present():
-    """When Pillow exists, a lossless PNG of a known grid must decode
-    (pil_pixels) to exactly the grid decode_pixels reads from the
-    equivalent PGM — so the dHash (and every banded pair downstream)
-    is identical whichever decoder fed it. Skipped codec-less."""
-    import pytest as _pytest
-
-    _pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from map_reduce_sf_crime_spark.operators.multimodal import (
-        decode_pixels,
-        dhash64,
-        pil_decode,
-        pil_pixels,
-    )
-
-    w, h = 17, 11
-    grid = [[(3 * r * r + 7 * c * c + r * c) % 256 for c in range(w)] for r in range(h)]
-    img = Image.new("L", (w, h))
-    img.putdata([v for row in grid for v in row])
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    png = buf.getvalue()
-    pgm = b"P5 %d %d 255\n" % (w, h) + bytes(
-        v for row in grid for v in row
-    )
-    assert pil_pixels(png) == decode_pixels(pgm) == grid
-    assert dhash64(pil_pixels(png)) == dhash64(decode_pixels(pgm))
-    meta = pil_decode(png)
-    assert (meta["width"], meta["height"], meta["format"]) == (w, h, "png")
-    assert meta["mean_byte"] == sum(sum(r) for r in grid) / (w * h)
-
-
-def test_pil_seams_raise_clear_importerror_when_absent():
-    """In a codec-less container the PIL seams must raise an
-    ImportError that names the dependency and the stdlib fallback."""
-    import pytest as _pytest
-
-    try:
-        import PIL  # noqa: F401
-
-        _pytest.skip("Pillow present — the absent-path is untestable")
-    except ImportError:
-        pass
-    from map_reduce_sf_crime_spark.operators.multimodal import (
-        pil_decode,
-        pil_pixels,
-    )
-
-    with _pytest.raises(ImportError, match="Pillow"):
-        pil_pixels(b"\x89PNG\r\n\x1a\n")
-    with _pytest.raises(ImportError, match="Pillow"):
-        pil_decode(b"\x89PNG\r\n\x1a\n")
-
-
 def test_features_with_dhash_fused_equals_composition(spark):
     """r11 fusion: the single-pass features_with_dhash must equal
     extract_features ⋈ image_dhash BIT FOR BIT — on the vectorized

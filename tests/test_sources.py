@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from map_reduce_sf_crime_spark.sources.csv_crimes import read_crimes_csv
-from map_reduce_sf_crime_spark.sources.tsv import extract_keys, read_report, write_report
+from map_reduce_sf_crime_spark.sources.tsv import read_report, write_report
 
 HEADER = (
     "IncidntNum,Category,Descript,DayOfWeek,Date,Time,PdDistrict,"
@@ -63,4 +63,3 @@ def test_tsv_report_roundtrip(spark, tmp_path: pathlib.Path):
     )
     rows = {r.key: (r.n, r.s) for r in back.collect()}
     assert rows == {"MISSION": (3, 'quoted,"val"'), "SOUTHERN": (5, "plain")}
-    assert extract_keys(back) == ["MISSION", "SOUTHERN"]

@@ -52,18 +52,6 @@ def test_star_invariants(spark):
     inc.unpersist()
 
 
-def test_salted_count_matches_plain(spark):
-    """Salted two-phase aggregation is result-identical to the direct
-    groupBy (functions/skew.py) — the skew-mitigation path must never
-    change answers."""
-    from map_reduce_sf_crime_spark.functions.skew import salted_count
-
-    inc = category_incidents(spark, SF_SMOKE)
-    plain = {(r.category, r["count"]) for r in inc.groupBy("category").count().collect()}
-    salted = {(r.category, r["count"]) for r in salted_count(inc, "category").collect()}
-    assert plain == salted
-
-
 def _formatted(df):
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

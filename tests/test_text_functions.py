@@ -105,9 +105,14 @@ def test_adversarial_docs_cross_engine_parity(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"create view documents as select * from '{path}'")
 
+    profile = textops.text_profile(sdf)
     checks = [
-        ("token_stats", textops.token_stats(sdf), textops.TOKEN_STATS_SQL),
-        ("lang_id", textops.lang_id(sdf).select("doc_id", "lang_pred"),
+        ("token_stats",
+         profile.select(
+             "doc_id", "n_chars", "n_tokens", "n_bpe_tokens", "n_unique_tokens"
+         ),
+         textops.TOKEN_STATS_SQL),
+        ("lang_id", profile.select("doc_id", "lang_pred"),
          f"select doc_id, lang_pred from ({textops.LANG_ID_SQL})"),
         ("quality", textops.quality_scores(sdf), textops.quality_scores_sql()),
         ("near_dup", dedup.near_dup_pairs_exact(sdf, 3, 0.5),
@@ -129,12 +134,12 @@ def test_pii_scrub_redacts_planted_pii(spark):
 
     docs = spark.createDataFrame(
         [
-            Row(doc_id=1, text="contact bob at bob.smith+x@mail.example.com ok"),
-            Row(doc_id=2, text="call 415-555-1234 or ssn 123-45-6789 now"),
-            Row(doc_id=3, text="clean text with no identifiers at all"),
+            Row(doc_id=1, text="contact bob at bob.smith+x@mail.example.com ok", lang="en"),
+            Row(doc_id=2, text="call 415-555-1234 or ssn 123-45-6789 now", lang="en"),
+            Row(doc_id=3, text="clean text with no identifiers at all", lang="en"),
         ]
     )
-    out = {r.doc_id: r for r in textops.pii_scrub(docs).collect()}
+    out = {r.doc_id: r for r in textops.text_profile(docs).collect()}
     assert out[1].n_email == 1 and out[1].n_phone == 0 and out[1].n_ssn == 0
     assert out[2].n_phone == 1 and out[2].n_ssn == 1 and out[2].n_email == 0
     assert out[3].n_email == out[3].n_phone == out[3].n_ssn == 0
@@ -164,12 +169,12 @@ def test_repetition_stats_detects_loops(spark):
 
     docs = spark.createDataFrame(
         [
-            Row(doc_id=1, text="spam spam spam spam spam"),
-            Row(doc_id=2, text="all words here are fully distinct tokens"),
-            Row(doc_id=3, text="one"),
+            Row(doc_id=1, text="spam spam spam spam spam", lang="en"),
+            Row(doc_id=2, text="all words here are fully distinct tokens", lang="en"),
+            Row(doc_id=3, text="one", lang="en"),
         ]
     )
-    out = {r.doc_id: r for r in textops.repetition_stats(docs).collect()}
+    out = {r.doc_id: r for r in textops.text_profile(docs).collect()}
     assert out[1].top_bigram_ratio == 1.0  # only bigram is "spam spam"
     assert out[1].n_bigrams == 4
     # distinct text: every bigram unique -> ratio = 1/n_bigrams
